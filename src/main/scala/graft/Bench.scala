@@ -1,4 +1,5 @@
 package graft
+import scala.util.control.NonFatal
 import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: one JSON line with per-query seconds.
@@ -8,27 +9,15 @@ import org.apache.spark.sql.SparkSession
   * speedup. `SPARK_GRAFT_ONLY=q_a,q_b` restricts to a subset (local
   * iteration only; the driver runs the full set).
   *
-  * Cost-attribution caveat: queries that share a session-memoized
-  * computation charge the shared work to whichever of them runs FIRST
-  * in map-iteration order; the others read the cache. The groups:
-  * the near-dup trio (Dedup.nearDupPairsShared / nearDupLabels), the
-  * exact-substring pair (Dedup.substrDupPosShared), and — since the
-  * r12 optimization round — the event-graph family (q_pagerank/q_hits/
-  * q_triangle_stats/q_kcore/q_kcore_fixpoint/q_label_propagation/
-  * q_reach_paths/q_graph_degrees share GraphOps.sharedEdges +
-  * sharedNodes), the containment pair (q_containment_join +
-  * q_pagerank_docs share Dedup.containmentPairsShared), the typo
-  * twins (MiningOps' typoNamePairsShared), the time-series family
-  * (q_seasonality/q_acf/q_ljung_box/q_cusum/q_stl_decompose/
-  * q_seasonal_anomalies/q_siegel_trend/q_theil_sen share
-  * TimeSeries.sharedDailyRevenue; the STL pair additionally shares
-  * TimeSeries.sharedStlResidual), the Gram pair (q_embed_gram +
-  * q_pca_project share Similarity.sharedEmbedGram), the IVF pair
-  * (q_ann_ivf_topk + q_ann_ivfpq_topk share
-  * Similarity.sharedKmeansCentroids), and the BPE trio (q_bpe_merges/
-  * q_bpe_encode/q_sequence_pack_bpe share TextOps.bpeTrainShared).
-  * Per-key numbers for those keys are attribution, not standalone
-  * cost — compare the GROUP's sum across rounds, or the run total.
+  * Cost-attribution caveat: queries that share a session memo
+  * ([[graft.engine.Shared]], which names the keys sharing each of
+  * `nearDup.pairs`, `nearDup.labels`, `substr.dupPos`,
+  * `containment.pairs`, `graph.edges`, `graph.nodes`, `typo.namePairs`,
+  * `ts.daily`, `ts.stl`, `embed.gram`, `ivf.centroids` and `bpe.train`)
+  * charge the shared build to whichever of them runs FIRST in
+  * map-iteration order; the others read the memo. Per-key numbers for
+  * those keys are attribution, not standalone cost — compare the
+  * group's sum across rounds, or the run total.
   */
 object Bench {
   /** Driver-facing final stdout line. The driver keeps only a BOUNDED
@@ -40,7 +29,8 @@ object Bench {
     * queries/sf) with the TOP-K most expensive queries — the ones that
     * carry the total — greedily packed under `budget` bytes so the
     * line survives the tail complete, plus `queries_omitted` (count)
-    * and `omitted_max_s` (upper bound on every omitted key's seconds)
+    * and `omitted_max_s` (upper bound on every omitted key's seconds,
+    * clamped to its reserved 9 characters: 99999.999 reads "at least")
     * so a consumer knows exactly what the truncation hides. No query
     * is removed from the RUN: all keys are timed, summed into `value`,
     * and recorded in the artifact file + the early `total_full` stdout
@@ -67,7 +57,8 @@ object Bench {
       else full = false
     }
     val omitted = ranked.drop(taken.length)
-    val omittedMax = if (omitted.isEmpty) 0.0 else omitted.map(_._2).max
+    val omittedMax =
+      if (omitted.isEmpty) 0.0 else math.min(omitted.map(_._2).max, 99999.999)
     val qs = taken.map { case (k, v) => s""""$k":${fmt(v)}""" }
       .mkString("{", ",", "}")
     head + s""""queries":$qs,"queries_omitted":${omitted.length},""" +
@@ -148,7 +139,7 @@ object Bench {
       // all): df.count() would let Catalyst prune every computed column
       // and eliminate the sort, timing a bare scan instead of the query
       val err = try { fn(spark, sfDir).queryExecution.toRdd.count(); None }
-        catch { case e: Throwable => Some(Option(e.getMessage).getOrElse(e.getClass.getName).take(200)) }
+        catch { case NonFatal(e) => Some(Option(e.getMessage).getOrElse(e.getClass.getName).take(200)) }
       (name, (System.nanoTime() - t0) / 1e9, err)
     }
     val ok = results.collect { case (k, v, None) => k -> v }

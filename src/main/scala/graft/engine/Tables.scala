@@ -27,6 +27,12 @@ object Tables {
     if (name == "events") normalizeEventTs(df) else df
   }
 
+  /** [[load]] on a [[GraftSession.tuned]] session: the loader every
+    * query module reads its inputs with (`import graft.engine.Tables.t`).
+    */
+  def t(s: SparkSession, dir: String, name: String): DataFrame =
+    load(GraftSession.tuned(s), dir, name)
+
   /** ONE definition of the events.ts physical-type adaptation (shared
     * with the streaming source, which reads the parquet directly).
     */

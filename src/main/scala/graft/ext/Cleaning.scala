@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 import graft.GraftQuery
-import graft.engine.{GraftSession, Tables}
+import graft.engine.Tables.t
 import graft.functions.TextOps
 
 /** Training-corpus cleaning operators (north-star Tier B): PII
@@ -23,9 +23,6 @@ import graft.functions.TextOps
 object Cleaning {
 
   private val dec38 = DecimalType(38, 0)
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(GraftSession.tuned(s), dir, n)
 
   /** Row-local 10-way HASH fold of doc_id for train/held-out splits:
     * pmod(md5Uint32(doc_id), 10). A raw `doc_id % 10` is unbiased only

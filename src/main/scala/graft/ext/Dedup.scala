@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.GraftQuery
-import graft.engine.{GraftSession, Tables}
+import graft.engine.Shared
+import graft.engine.Tables.t
 import graft.functions.TextOps
 
 /** Deduplication for training-data pipelines (north-star Tier B):
@@ -21,9 +22,6 @@ import graft.functions.TextOps
   * (simhashPairs) and skewed joins split by AQE (GraftSession).
   */
 object Dedup {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(GraftSession.tuned(s), dir, n)
 
   // ---- exact ----------------------------------------------------------
 
@@ -181,11 +179,11 @@ object Dedup {
     */
   // bandsDf feeds three subtrees (the oversized-bucket scan and both
   // join sides), so persisting it looks attractive — measured and
-  // REJECTED at the 10x fixture (tools/CcProfile, position-controlled
-  // A/B): cold-run cost is identical (3.98 vs 3.99 s; the stage is
-  // session-warmup-dominated) and the sig+explode recompute it would
-  // save is cheap next to the bucket join itself. Same outcome as the
-  // SRP cacheBuckets knob.
+  // REJECTED at the 10x fixture (BASELINE.md, "Persisting the LSH bands
+  // relation"; position-controlled A/B): cold-run cost is identical
+  // (3.98 vs 3.99 s; the stage is session-warmup-dominated) and the
+  // sig+explode recompute it would save is cheap next to the bucket
+  // join itself. Same outcome as the SRP cacheBuckets knob.
   def candidatePairs(bandsDf: DataFrame, idCol: String, numHashes: Int,
       minEstJaccard: Double, maxBucket: Int = 10000): DataFrame = {
     val oversized = oversizedBuckets(bandsDf, maxBucket)
@@ -653,7 +651,7 @@ object Dedup {
   // ---- registered queries ----------------------------------------------
 
   def minhashQuery(s: SparkSession, dir: String): DataFrame =
-    nearDupPairsShared(s, dir).orderBy("id1", "id2")
+    nearDupPairsShared(s, dir)._2.orderBy("id1", "id2")
 
   def simhashQuery(s: SparkSession, dir: String): DataFrame =
     simhashPairs(t(s, dir, "documents"), "text", "doc_id",
@@ -1165,71 +1163,23 @@ object Dedup {
     labels
   }
 
-  /** Shared edge-building + components pipeline for the registered
-    * clustering queries — ONE definition, so `q_dedup_clusters` and
-    * `q_dedup_apply` cannot diverge on edge semantics.
-    *
-    * Memoized per (session, dir): [[connectedComponents]] returns
-    * lineage-cut (checkpointed, already-materialized) labels, so both
-    * registered queries — each self-contained from the harness's view —
-    * share ONE LSH + components computation per Verify/Bench run
-    * instead of recomputing the identical label set. Keyed on the
-    * session too: a cached DataFrame is unusable from any other
-    * session, and tests spin up several; entries of STOPPED sessions
-    * are evicted on every call so the memo can't pin dead sessions for
-    * the JVM lifetime. Assumes `dir`'s documents are immutable within
-    * a session — true for the driver fixtures every registered query
-    * reads (rewrite the table mid-session and you must use a new
-    * session or call the un-memoized builders directly). The compute
-    * runs OUTSIDE the map lock (get/putIfAbsent, not computeIfAbsent),
-    * so the MAP never blocks anyone for the multi-second job; the
-    * near-dup callers additionally serialize same-key first calls
-    * under a per-(session, dir) lock (see [[lockFor]]) — unrelated
-    * keys still proceed in parallel.
-    */
-  private def memoized(
-      map: java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame],
-      s: SparkSession, dir: String)(compute: => DataFrame): DataFrame = {
-    map.keySet.removeIf(_._1.sparkContext.isStopped)
-    val key = (s, dir)
-    Option(map.get(key)).getOrElse {
-      val computed = compute
-      Option(map.putIfAbsent(key, computed)).getOrElse(computed)
-    }
-  }
-
-  private val pairsMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private val labelsMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  // the shared path's inner shingle-set cache, held only until the pairs
-  // themselves are materialized (see nearDupLabels)
-  private val sharedSetsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private val substrDupPosMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private val containmentMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
   /** Default-parameter containment pairs over the documents table,
-    * UNSORTED, memoized per (session, dir) under a LAZY persist — the
-    * prefix-filter + verify pipeline is identical between the
-    * registered `q_containment_join` (adds the ORDER BY) and the
-    * doc-quote PageRank's edge construction
+    * UNSORTED, memoized per (session, dir) as [[graft.engine.Shared]]
+    * `containment.pairs` under a LAZY persist — the prefix-filter +
+    * verify pipeline is identical between the registered
+    * `q_containment_join` (adds the ORDER BY) and the doc-quote
+    * PageRank's edge construction
     * ([[graft.ext.GraphOps.docPageRankQuery]], which keeps only the
     * (sup_id, sub_id) projection), so a Verify/Bench run pays it once
     * across both keys. What persists is the thresholded directed pair
     * list (output-bounded), never the corpus-scale shingle relations.
-    * Same lock/lifecycle discipline as [[nearDupPairsShared]].
     */
   private[graft] def containmentPairsShared(s: SparkSession,
       dir: String): DataFrame =
-    lockFor(s, dir).synchronized {
-      memoized(containmentMemo, s, dir) {
-        containmentJoin(t(s, dir, "documents"), "text", "doc_id",
-          sorted = false)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      }
+    Shared("containment.pairs", s, dir) {
+      containmentJoin(t(s, dir, "documents"), "text", "doc_id",
+        sorted = false)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
   /** The full duplicated-position build shared by the exact-substring
@@ -1283,21 +1233,20 @@ object Dedup {
     * double gram explode and two full-gram-stream shuffles) — is
     * identical between them; they differ only in how they reduce the
     * duplicated-position list (spans ignores `is_first`). Memoized per
-    * (session, dir) exactly like [[nearDupPairsShared]], so a full
-    * Verify/Bench run pays the gram machinery ONCE across both keys
-    * and the second key starts from the cached positions. What is
+    * (session, dir) as [[graft.engine.Shared]] `substr.dupPos`, so a
+    * full Verify/Bench run pays the gram machinery ONCE across both
+    * keys and the second key starts from the cached positions. What is
     * persisted is the DUPLICATED-position list — (long, long, bool)
     * rows for positions covered by a df ≥ 2 gram only — typically a
     * small fraction of corpus positions, NOT the 24×-corpus-chars gram
-    * stream whose persist the r9 SubstrProbe A/B rejected (worst case,
-    * an all-duplicate corpus, it degrades to one row per position and
-    * spills via MEMORY_AND_DISK — still 30% the byte volume of the
-    * gram-stream persist and only reachable through this registered
-    * two-key composition; standalone library calls never persist).
-    * Lazy persist: plan-only consumers still see the full audit-able
-    * subtree; nothing executes until the first action. Same
-    * immutable-`dir` assumption as the near-dup memos; released by
-    * [[clearSessionMemos]].
+    * stream whose persist the r9 A/B rejected (BASELINE.md, "persisting
+    * the gram relation"; worst case, an all-duplicate corpus, it
+    * degrades to one row per position and spills via MEMORY_AND_DISK —
+    * still 30% the byte volume of the gram-stream persist and only
+    * reachable through this registered two-key composition; standalone
+    * library calls never persist). Lazy persist: plan-only consumers
+    * still see the full audit-able subtree; nothing executes until the
+    * first action.
     */
   private def substrDupPosShared(s: SparkSession, dir: String,
       L: Int = 30): DataFrame = {
@@ -1306,106 +1255,53 @@ object Dedup {
     // callers use the default; a different-L caller must use the
     // un-memoized substrDupPosOf directly)
     require(L == 30, s"substrDupPosShared is memoized for L=30 only, got $L")
-    // same per-key lock discipline as nearDupPairsShared/nearDupLabels:
-    // without it a first call racing clearSessionMemos could re-insert
-    // a persisted relation after release or have it unpersisted
-    // mid-query
-    lockFor(s, dir).synchronized {
-      memoized(substrDupPosMemo, s, dir) {
-        substrDupPosOf(t(s, dir, "documents"), "text", "doc_id", L)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      }
+    Shared("substr.dupPos", s, dir) {
+      substrDupPosOf(t(s, dir, "documents"), "text", "doc_id", L)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
   }
-  // PER-KEY locks serialize each (session, dir)'s compute-and-put
-  // against nearDupLabels' cache release and clearSessionMemos:
-  // without them, a concurrent first call racing the release could
-  // re-insert a shingle-set cache entry AFTER removal (pinning it for
-  // the session lifetime), and a clear could orphan persisted blocks
-  // mid-walk. Per-KEY, not one global lock: a caller for another
-  // (session, dir) never waits behind this key's multi-second LSH+CC
-  // materialization — only same-key callers contend, and they all
-  // want the identical memoized computation anyway.
-  private val keyLocks =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Object]()
-  private def lockFor(s: SparkSession, dir: String): Object =
-    keyLocks.computeIfAbsent((s, dir), _ => new Object)
 
-  /** Explicit release hook for long-lived library sessions: unpersists
-    * and drops every memoized near-dup relation (pairs, labels, and any
-    * in-flight shingle-set cache) for ALL sessions/dirs present at call
-    * time (a key whose first compute starts after the snapshot is
-    * untouched). The memos otherwise hold their persisted blocks until
-    * the owning session stops — correct for the fixture-driven harness,
-    * heavyweight for an application that processes many corpora through
-    * one session.
-    */
-  def clearSessionMemos(): Unit = {
-    val keys = new java.util.HashSet[(SparkSession, String)](keyLocks.keySet())
-    Seq(pairsMemo, labelsMemo, sharedSetsCache, substrDupPosMemo,
-      containmentMemo).foreach(m => keys.addAll(m.keySet()))
-    keys.forEach { key =>
-      lockFor(key._1, key._2).synchronized {
-        Seq(pairsMemo, labelsMemo, sharedSetsCache, substrDupPosMemo,
-          containmentMemo).foreach { m =>
-          Option(m.remove(key)).foreach { df =>
-            try df.unpersist()
-            catch { case _: Exception => () } // a stopped session's blocks are already gone
-          }
-        }
-        keyLocks.remove(key)
-      }
-    }
-    // engine-wide hook: also release GraphOps' shared graph memo,
-    // MiningOps' shared typo name-pair memo, and TimeSeries' shared
-    // day-grain revenue memo
-    GraphOps.clearEdgesMemo()
-    MiningOps.clearNamePairsMemo()
-    TimeSeries.clearDailyMemo()
-    Similarity.clearGramMemo()
-    Similarity.clearCentroidsMemo()
-    graft.functions.TextOps.clearBpeMemo()
-  }
-
-  /** Default-parameter near-dup pairs over the documents table,
-    * UNSORTED, memoized per (session, dir) under a LAZY persist — the
+  /** Default-parameter near-dup (shingle sets, pairs) over the documents
+    * table, pairs UNSORTED, memoized per (session, dir) as
+    * [[graft.engine.Shared]] `nearDup.pairs` under a LAZY persist — the
     * LSH+verify pipeline is the dominant cost shared by the registered
     * pair query AND the clustering/apply label computation, so all
     * three keys pay it a single time per run. persist (not checkpoint)
-    * on purpose: build stays lazy, so plan-only consumers
-    * (ExplainAudit, plan-pin specs) still see the full audit-able
-    * pipeline instead of a degenerate checkpoint-RDD scan, and nothing
-    * executes until the first action. The cached relation is the tiny
-    * thresholded pair list, held until the session ends.
+    * on purpose: build stays lazy, so plan-only consumers (plan-pin
+    * specs) still see the full audit-able pipeline instead of a
+    * degenerate checkpoint-RDD scan, and nothing executes until the
+    * first action. The cached relation is the tiny thresholded pair
+    * list; the corpus-sized shingle-set cache the pairs read rides
+    * along only until [[nearDupLabels]] has materialized them.
     */
-  private def nearDupPairsShared(s: SparkSession, dir: String): DataFrame =
-    lockFor(s, dir).synchronized {
-      memoized(pairsMemo, s, dir) {
-        val (sets, verified) = minhashPairsCore(t(s, dir, "documents"),
-          "text", "doc_id", shingleN = 2, numHashes = 16, bands = 8,
-          threshold = 0.5, cacheSets = true)
-        sharedSetsCache.put((s, dir), sets)
-        verified.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      }
+  private def nearDupPairsShared(s: SparkSession,
+      dir: String): (DataFrame, DataFrame) =
+    Shared("nearDup.pairs", s, dir) {
+      val (sets, verified) = minhashPairsCore(t(s, dir, "documents"),
+        "text", "doc_id", shingleN = 2, numHashes = 16, bands = 8,
+        threshold = 0.5, cacheSets = true)
+      (sets, verified.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     }
 
-  // the whole compute runs under THIS KEY's lock (reentrant into
-  // nearDupPairsShared's synchronized): every mutation of the key's
-  // entries across all three memo maps is serialized, so
-  // clearSessionMemos can neither race a late putIfAbsent re-pinning
-  // a cleared relation nor orphan a persisted block mid-clear — while
-  // other (session, dir) keys proceed in parallel
+  /** Shared edge-building + components pipeline for the registered
+    * clustering queries — ONE definition, so `q_dedup_clusters` and
+    * `q_dedup_apply` cannot diverge on edge semantics. Memoized per
+    * (session, dir) as [[graft.engine.Shared]] `nearDup.labels`:
+    * [[connectedComponents]] returns lineage-cut (checkpointed,
+    * already-materialized) labels, so both registered queries — each
+    * self-contained from the harness's view — share ONE LSH +
+    * components computation per Verify/Bench run instead of
+    * recomputing the identical label set.
+    */
   private def nearDupLabels(s: SparkSession, dir: String): DataFrame =
-    lockFor(s, dir).synchronized {
-      memoized(labelsMemo, s, dir) {
-        val labels = connectedComponents(
-          nearDupPairsShared(s, dir).select(col("id1"), col("id2")))
-        // CC ran ⇒ the shared pairs are fully materialized in their own
-        // cache ⇒ the inner corpus-sized shingle-set cache is dead
-        // weight for the rest of the session — release it
-        Option(sharedSetsCache.remove((s, dir))).foreach(_.unpersist())
-        labels
-      }
+    Shared("nearDup.labels", s, dir) {
+      val (sets, pairs) = nearDupPairsShared(s, dir)
+      val labels = connectedComponents(pairs.select(col("id1"), col("id2")))
+      // CC ran ⇒ the shared pairs are fully materialized in their own
+      // cache ⇒ the inner corpus-sized shingle-set cache is dead
+      // weight for the rest of the session — release it
+      sets.unpersist()
+      labels
     }
 
   /** Near-dup clusters over the MinHash+LSH pair graph
@@ -1458,7 +1354,7 @@ object Dedup {
     * on boilerplate-heavy crawls.
     */
   def nearDupTopM(s: SparkSession, dir: String, m: Int = 3): DataFrame = {
-    val pairs = nearDupPairsShared(s, dir)
+    val pairs = nearDupPairsShared(s, dir)._2
     val sym = pairs
       .select(col("id1").as("doc_id"), col("id2").as("match_id"), col("jaccard"))
       .unionAll(pairs

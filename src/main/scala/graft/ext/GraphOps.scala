@@ -5,7 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.GraftQuery
-import graft.engine.{GraftSession, Tables}
+import graft.engine.{GraftSession, Shared}
+import graft.engine.Tables.t
 
 /** Graph-shaped corpus operators beyond connected components
   * ([[Dedup.connectedComponents]]): link-graph construction from event
@@ -41,9 +42,6 @@ import graft.engine.{GraftSession, Tables}
   * what ReuseExchange already shares).
   */
 object GraphOps {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(GraftSession.tuned(s), dir, n)
 
   private val Scale = 1000000L
 
@@ -579,19 +577,18 @@ object GraphOps {
     * here is bounded by |nodes|·max_outdeg^depth — pick the loop style
     * accordingly at scale.
     */
-  // Session-memoized edge list + node set per (session, dir), same
-  // lifecycle policy as Dedup's near-dup memos: held until the session
-  // stops or [[Dedup.clearSessionMemos]] (the engine-wide release hook)
-  // runs. Originally reachPaths-only (UnionLoop re-runs the recursive
-  // step's subtree per level); since r12 EVERY registered graph key
-  // shares it: the whole family re-derived the SAME transition-edge
-  // relation — a full events scan + per-user lag window + aggregate —
-  // once per key AND once per intra-query reference (triangle census:
-  // 3+ subtrees; exchange reuse does not span keys, and within a key
-  // only canonically-equal subtrees dedup). The edge relation itself is
-  // page-domain²-bounded (and the node set domain-bounded) — sharing it
-  // is the guide §2.4/§5 cache-reused-relations case, NEVER corpus-
-  // scale, while the events window it replaces is corpus-scale work.
+  // Session-memoized edge list + node set per (session, dir)
+  // (graft.engine.Shared `graph.edges` / `graph.nodes`). Originally
+  // reachPaths-only (UnionLoop re-runs the recursive step's subtree per
+  // level); since r12 EVERY registered graph key shares it: the whole
+  // family re-derived the SAME transition-edge relation — a full events
+  // scan + per-user lag window + aggregate — once per key AND once per
+  // intra-query reference (triangle census: 3+ subtrees; exchange reuse
+  // does not span keys, and within a key only canonically-equal
+  // subtrees dedup). The edge relation itself is page-domain²-bounded
+  // (and the node set domain-bounded) — sharing it is the guide §2.4/§5
+  // cache-reused-relations case, NEVER corpus-scale, while the events
+  // window it replaces is corpus-scale work.
   //
   // EAGER localCheckpoint, NOT a lazy persist — measured, not stylistic:
   // the unrolled iterative keys reference this relation a combinatorial
@@ -615,18 +612,14 @@ object GraphOps {
   // kCore/hits/labelPropagation keep the raw subtree path).
   // Per-key bench numbers for the family are attribution, not
   // standalone cost — the Bench docstring's shared-memo caveat applies.
-  private val edgesMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private val nodesMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
   /** The eagerly-checkpointed per-(session, dir) transition-edge
     * relation every registered graph key shares (see the memo comment
     * above for the persist-vs-checkpoint measurement).
     */
   private[graft] def sharedEdges(s: SparkSession, dir: String): DataFrame =
-    edgesMemo.computeIfAbsent((s, dir), _ =>
-      transitionEdges(t(s, dir, "events")).localCheckpoint())
+    Shared("graph.edges", s, dir) {
+      transitionEdges(t(s, dir, "events")).localCheckpoint()
+    }
 
   /** The eagerly-checkpointed per-(session, dir) node universe (every
     * observed props.k page id) — NOT derivable from [[sharedEdges]]: a
@@ -634,24 +627,11 @@ object GraphOps {
     * no edge row but is still a graph node.
     */
   private[graft] def sharedNodes(s: SparkSession, dir: String): DataFrame =
-    nodesMemo.computeIfAbsent((s, dir), _ =>
+    Shared("graph.nodes", s, dir) {
       t(s, dir, "events")
         .select(get_json_object(col("props"), "$.k").cast("int").as("node"))
         .where(col("node").isNotNull).distinct()
-        .localCheckpoint())
-
-  private[ext] def clearEdgesMemo(): Unit =
-    Seq(edgesMemo, nodesMemo).foreach { m =>
-      val it = m.entrySet().iterator()
-      while (it.hasNext) {
-        val e = it.next(); it.remove()
-        // localCheckpoint blocks are owned by the checkpointed RDD, not
-        // a cached plan — unpersist() is the correct call for any
-        // residual cached plan, and dropping the map reference lets the
-        // ContextCleaner release the checkpoint blocks once unreachable
-        try e.getValue.unpersist()
-        catch { case _: Exception => () } // a stopped session's blocks are already gone
-      }
+        .localCheckpoint()
     }
 
   def reachPaths(s: SparkSession, dir: String): DataFrame = {

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.GraftQuery
-import graft.engine.{GraftSession, Tables}
+import graft.engine.Shared
+import graft.engine.Tables.t
 
 /** Frequent-itemset mining over order baskets (Agrawal & Srikant 1994's
   * support/confidence/lift vocabulary, pair-level) — the co-occurrence
@@ -23,9 +24,6 @@ import graft.engine.{GraftSession, Tables}
   * denominator separate until ONE double division both engines share.
   */
 object MiningOps {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(GraftSession.tuned(s), dir, n)
 
   /** Top-k item pairs by basket support with confidence and lift. */
   def itemsetPairs(lineitem: DataFrame, k: Int = 20): DataFrame = {
@@ -180,28 +178,16 @@ object MiningOps {
   // `q_typo_pair_stats`): the SymSpell blocking + graft_edit1 verify +
   // pair distinct — the dominant cost of both keys — is byte-identical
   // between them (both run over DISTINCT c_name); only the downstream
-  // expansion differs (id pairs vs counting). Same (session, dir)
-  // memo + lifecycle policy as GraphOps' shared edges; released by
-  // [[clearNamePairsMemo]] via Dedup.clearSessionMemos. typoNamePairs
-  // already localCheckpoints internally, so the memoized relation is
+  // expansion differs (id pairs vs counting). Memoized per (session,
+  // dir) as graft.engine.Shared `typo.namePairs`. typoNamePairs already
+  // localCheckpoints internally, so the memoized relation is
   // materialization-cut — the memo's only job is cross-key reuse.
-  private val namePairsMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
   private def typoNamePairsShared(s: SparkSession, dir: String): DataFrame =
-    namePairsMemo.computeIfAbsent((s, dir), _ =>
+    Shared("typo.namePairs", s, dir) {
       typoNamePairs(t(s, dir, "customer")
         .select(col("c_name").as("name")).distinct())
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-
-  private[ext] def clearNamePairsMemo(): Unit = {
-    val it = namePairsMemo.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next(); it.remove()
-      try e.getValue.unpersist()
-      catch { case _: Exception => () } // a stopped session's blocks are already gone
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
-  }
 
   val queries: Seq[GraftQuery] = Seq(
     GraftQuery("q_typo_pair_stats",

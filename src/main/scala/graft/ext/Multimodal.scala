@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.GraftQuery
-import graft.engine.{GraftSession, Tables}
+import graft.engine.Tables.t
 
 /** Typed asset row for the [[Multimodal.typedDecode]] partition-decode
   * path (Dataset[T] with a case-class Encoder).
@@ -39,9 +39,6 @@ final class FakeCodec {
   * for a real codec is a single expression replacement.
   */
 object Multimodal {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(GraftSession.tuned(s), dir, n)
 
   /** Asset schema: id + opaque payload + typed metadata. */
   val assetSchema: StructType = StructType(Seq(

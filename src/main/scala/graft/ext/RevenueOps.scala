@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 import graft.GraftQuery
-import graft.engine.{GraftSession, Tables}
+import graft.engine.Tables.t
 
 /** Revenue / customer-base analytics: RFM segmentation, month-over-
   * month growth, cohort lifetime value, inter-order gap distribution,
@@ -21,9 +21,6 @@ import graft.engine.{GraftSession, Tables}
   * surprisal-buckets pattern), never a global rank window.
   */
 object RevenueOps {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(GraftSession.tuned(s), dir, n)
 
   private def cents(c: Column): Column =
     floor(c * 100 + 0.5).cast("long")

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.GraftQuery
-import graft.engine.{GraftSession, Tables}
+import graft.engine.Shared
+import graft.engine.Tables.t
 
 /** Similarity search over an embedding column (`array<float>`),
   * north-star Tier B.
@@ -23,9 +24,6 @@ import graft.engine.{GraftSession, Tables}
   * no UDF, no driver collect of the big side.
   */
 object Similarity {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(GraftSession.tuned(s), dir, n)
 
   /** Cosine similarity of two array<float|double> columns via the native
     * codegen'd [[graft.functions.CosineExpr]] (strict left-to-right
@@ -93,8 +91,7 @@ object Similarity {
     * the 100 TB plane count (p≈22, 4M buckets) radius-3 probing still
     * touches only ~1.8k of 4M buckets. On this fixture (near-orthogonal
     * neighbors — SRP's hard case) measured recall@10 is 0.4–0.7 at
-    * radius 1, 0.5–0.9 at radius 2, 1.0 at radius 3 across all SFs
-    * (tools/AnnTune).
+    * radius 1, 0.5–0.9 at radius 2, 1.0 at radius 3 across all SFs.
     */
   def lshTopK(emb: DataFrame, queryVecId: Long, k: Int,
       numPlanes: Option[Int] = None, probeRadius: Int = 2): DataFrame = {
@@ -243,18 +240,14 @@ object Similarity {
   // actions each) over the same embeddings table. The result is a
   // k·dim driver-side array (16×64 doubles), deterministic by
   // construction (stride-sample init, fixed iterations, 1e-9-rounded
-  // means), so sharing it is value-invisible. Same (session, dir)
-  // lifecycle discipline as the DataFrame memos; plain data, nothing
-  // to unpersist.
-  private val centroidsMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int, Int), Array[(Int, Seq[Double])]]()
-
+  // means), so sharing it is value-invisible. Memoized as
+  // graft.engine.Shared `ivf.centroids/k/iters`; plain data, nothing to
+  // unpersist.
   private[graft] def sharedKmeansCentroids(s: SparkSession, dir: String,
       k: Int, iters: Int): Array[(Int, Seq[Double])] =
-    centroidsMemo.computeIfAbsent((s, dir, k, iters), _ =>
-      kmeansCentroids(t(s, dir, "embeddings"), k, iters))
-
-  private[ext] def clearCentroidsMemo(): Unit = centroidsMemo.clear()
+    Shared(s"ivf.centroids/$k/$iters", s, dir) {
+      kmeansCentroids(t(s, dir, "embeddings"), k, iters)
+    }
 
   /** IVF list assignment: each vector goes to its nearest centroid (by
     * cosine against the broadcast centroid-table literal). `graft_srp_bucket`'s
@@ -458,7 +451,7 @@ object Similarity {
   // are random near-orthogonal (the hard case for ANY quantizer — the
   // top-10/bulk similarity gap shrinks as n grows), and the worst ADC
   // rank of a true top-10 member measured 163/63/115/2133 at
-  // n=500/500/2000/20000 (tools-probe, m=8 kSub=32). The default is
+  // n=500/500/2000/20000 (m=8 kSub=32). The default is
   // SUBLINEAR — max(250, 20·√n) — so the documented hazard of a
   // linear-fraction re-rank cannot ship by accident: 447/894/2828 at
   // n=500/2000/20000 covers every measured worst rank (1.3–7.8×
@@ -569,7 +562,7 @@ object Similarity {
 
   /** Probe radius 3: measured recall@10 = 1.0 at sf0.001/0.01/0.1
     * (radius 2 → 0.4–0.9 — this fixture's neighbors are near-orthogonal,
-    * the hard case for SRP; tools/AnnTune measures). At the 100 TB plane
+    * the hard case for SRP). At the 100 TB plane
     * count (p≈22) radius 3 still probes ~1.8k of 4M buckets.
     */
   def lshTopkQuery(s: SparkSession, dir: String): DataFrame =
@@ -577,7 +570,7 @@ object Similarity {
 
   /** nProbe 8 of 16 lists: the measured minimum for recall@10 = 1.0 with
     * k-means centroids across ALL fixture SFs (nProbe 6 → 0.9 at
-    * sf0.001; nProbe 4 → 0.9 at sf0.01/0.1 — tools/AnnTune measures).
+    * sf0.001; nProbe 4 → 0.9 at sf0.01/0.1).
     * The fixture is a HARD case — its nearest neighbors sit at cosine
     * ≈ 0.3, so they scatter across lists; real near-dup workloads
     * cluster far tighter and probe fewer lists.
@@ -892,23 +885,12 @@ object Similarity {
   // solve the d×d eigenproblem), yet each key re-ran the corpus-scale
   // explode+aggregate. The relation is d²-BOUNDED (d = 64 → 2080 rows
   // — never corpus-scale), so an eager localCheckpoint is the right
-  // materialization; same lifecycle and first-runner attribution
-  // caveats as TimeSeries.sharedDailyRevenue.
-  private val gramMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
+  // materialization (graft.engine.Shared `embed.gram`); same
+  // first-runner attribution caveat as TimeSeries.sharedDailyRevenue.
   private[graft] def sharedEmbedGram(s: SparkSession, dir: String): DataFrame =
-    gramMemo.computeIfAbsent((s, dir), _ =>
-      embedGramCore(t(s, dir, "embeddings")).localCheckpoint())
-
-  private[ext] def clearGramMemo(): Unit = {
-    val it = gramMemo.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next(); it.remove()
-      try e.getValue.unpersist()
-      catch { case _: Exception => () } // a stopped session's blocks are already gone
+    Shared("embed.gram", s, dir) {
+      embedGramCore(t(s, dir, "embeddings")).localCheckpoint()
     }
-  }
 
   /** Driver-side power iteration over a [[embedGram]]-shaped d×d matrix
     * (symmetric PSD): returns the dominant eigenvector (deterministic
@@ -1185,8 +1167,9 @@ object Similarity {
           |ORDER BY p.a_id""".stripMargin)),
     // Both ANN oracles are the brute-force exact top-k: hash-equality
     // asserts observed recall@10 = 1.0 — measured to hold at sf0.001,
-    // sf0.01 AND sf0.1 (tools/AnnTune), and stable because the probed
-    // buckets/lists are deterministic, not a lucky sample.
+    // sf0.01 AND sf0.1 (the sweeps at lshTopkQuery and ivfTopkQuery),
+    // and stable because the probed buckets/lists are deterministic, not
+    // a lucky sample.
     GraftQuery("q_ann_lsh_topk", "SRP-LSH bucketed ANN top-k, Hamming-3 multiprobe (oracle = exact top-k, recall 1.0 at all fixture SFs)",
       lshTopkQuery,
       Some(annOracleSql(k = 10))),

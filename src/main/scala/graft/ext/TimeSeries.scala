@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 import graft.GraftQuery
-import graft.engine.{GraftSession, Tables}
+import graft.engine.Shared
+import graft.engine.Tables.t
 
 /** Time-series analytics over the daily order-revenue series plus
   * event-level survival analysis — the monitoring/forecast-prep family
@@ -31,9 +32,6 @@ object TimeSeries {
 
   private val dec38 = DecimalType(38, 0)
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(GraftSession.tuned(s), dir, n)
-
   /** Shared series: one row per order date, revenue in exact cents.
     * One map-side-combined aggregate — the only pass over the corpus.
     */
@@ -44,61 +42,47 @@ object TimeSeries {
       .groupBy("day")
       .agg(sum("cents").as("cents"))
 
-  // Session-memoized day-grain revenue series per (session, dir) — the
-  // sharedEdges pattern applied to this family: EVERY registered
-  // time-series key starts from the identical dailyRevenue aggregate (a
-  // full orders scan), and the STL pair additionally re-nested it 4×
-  // inside one plan (q_seasonal_anomalies: 8 orders scans / 8
-  // single-partition windows statically, 4.31 s at sf0.1 when its own
-  // stl subtree keys at 0.63 s). The relation is DAY-DOMAIN-bounded (a
-  // century is ~37k rows — never corpus-scale), so an EAGER
-  // localCheckpoint is the right materialization: the plan truncates to
-  // one compact leaf, per-reference re-derivation disappears, and a
-  // d-row relation is safe to re-derive on executor loss at any scale.
-  // The explicit repartition keeps the tiny relation spread (AQE would
-  // coalesce it to ONE partition — the measured theilSen/siegelTrend
-  // single-core trap). Same lifecycle as the other memos: released by
-  // [[Dedup.clearSessionMemos]] via [[clearDailyMemo]]. Per-key bench
-  // numbers for the family are attribution (first key pays the scan) —
-  // the Bench docstring's shared-memo caveat applies. Divide guards are
-  // unaffected by the lineage cut: every denominator in this family
-  // derives from aggregates/windows ABOVE the day grain.
-  private val dailyMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
+  // Session-memoized day-grain revenue series per (session, dir)
+  // (graft.engine.Shared `ts.daily`) — the sharedEdges pattern applied
+  // to this family: EVERY registered time-series key starts from the
+  // identical dailyRevenue aggregate (a full orders scan), and the STL
+  // pair additionally re-nested it 4× inside one plan
+  // (q_seasonal_anomalies: 8 orders scans / 8 single-partition windows
+  // statically, 4.31 s at sf0.1 when its own stl subtree keys at
+  // 0.63 s). The relation is DAY-DOMAIN-bounded (a century is ~37k rows
+  // — never corpus-scale), so an EAGER localCheckpoint is the right
+  // materialization: the plan truncates to one compact leaf,
+  // per-reference re-derivation disappears, and a d-row relation is
+  // safe to re-derive on executor loss at any scale. The explicit
+  // repartition keeps the tiny relation spread (AQE would coalesce it
+  // to ONE partition — the measured theilSen/siegelTrend single-core
+  // trap). Per-key bench numbers for the family are attribution (first
+  // key pays the scan) — the Bench docstring's shared-memo caveat
+  // applies. Divide guards are unaffected by the lineage cut: every
+  // denominator in this family derives from aggregates/windows ABOVE
+  // the day grain.
   private[graft] def sharedDailyRevenue(s: SparkSession, dir: String): DataFrame =
-    dailyMemo.computeIfAbsent((s, dir), _ =>
+    Shared("ts.daily", s, dir) {
       dailyRevenue(t(s, dir, "orders"))
         .repartition(s.sparkContext.defaultParallelism)
-        .localCheckpoint())
-
-  // Session-memoized STL decomposition per (session, dir) — decompose
-  // is seasonalAnomalies' exact prefix (anomalies = residual z-scores
-  // OVER the decompose output), yet each key compiled and ran its own
-  // copy of the window/CASE pipeline; the anomalies key's measured
-  // cost was DOMINATED by that cold whole-stage-codegen (4.40 s in the
-  // r12 pin vs 1.21 s for the same chain warm). One checkpointed copy
-  // of the day-domain relation (≤ 37k rows/century — never
-  // corpus-scale) serves both keys. Same lifecycle and attribution
-  // caveats as [[sharedDailyRevenue]].
-  private val stlMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
-  private[graft] def sharedStlResidual(s: SparkSession, dir: String): DataFrame =
-    stlMemo.computeIfAbsent((s, dir), _ =>
-      stlCore(t(s, dir, "orders"), Some(sharedDailyRevenue(s, dir)))
-        .localCheckpoint())
-
-  private[ext] def clearDailyMemo(): Unit = {
-    for (memo <- Seq(dailyMemo, stlMemo)) {
-      val it = memo.entrySet().iterator()
-      while (it.hasNext) {
-        val e = it.next(); it.remove()
-        try e.getValue.unpersist()
-        catch { case _: Exception => () } // a stopped session's blocks are already gone
-      }
+        .localCheckpoint()
     }
-  }
+
+  // Session-memoized STL decomposition per (session, dir)
+  // (graft.engine.Shared `ts.stl`, whose build reads `ts.daily`) —
+  // decompose is seasonalAnomalies' exact prefix (anomalies = residual
+  // z-scores OVER the decompose output), yet each key compiled and ran
+  // its own copy of the window/CASE pipeline; the anomalies key's
+  // measured cost was DOMINATED by that cold whole-stage-codegen
+  // (4.40 s in the r12 pin vs 1.21 s for the same chain warm). One
+  // checkpointed copy of the day-domain relation (≤ 37k rows/century —
+  // never corpus-scale) serves both keys. Same lifecycle and
+  // attribution caveats as [[sharedDailyRevenue]].
+  private[graft] def sharedStlResidual(s: SparkSession, dir: String): DataFrame =
+    Shared("ts.stl", s, dir) {
+      stlCore(t(s, dir, "orders"), Some(sharedDailyRevenue(s, dir)))
+        .localCheckpoint()
+    }
 
   // ---- day-of-week seasonal profile -----------------------------------
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.GraftQuery
-import graft.engine.{GraftSession, Tables}
+import graft.engine.Tables.t
 import graft.functions.TextOps
 
 /** Training-data preparation operators (north-star Tier B): the steps
@@ -14,9 +14,6 @@ import graft.functions.TextOps
   * md5, which DuckDB shares, instead of engine-specific hashes).
   */
 object TrainingPrep {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(GraftSession.tuned(s), dir, n)
 
   private val normToks = TextOps.duckNormToksSql
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.GraftQuery
-import graft.engine.{GraftSession, Tables}
+import graft.engine.Tables.t
 
 /** Web-crawl data-pipeline operators: URL parsing, per-domain corpus
   * statistics, HTML boilerplate stripping, anchor-text extraction, and
@@ -33,9 +33,6 @@ import graft.engine.{GraftSession, Tables}
   * hosts), so no single partition concentrates the corpus.
   */
 object WebOps {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(GraftSession.tuned(s), dir, n)
 
   /** Deterministic planted URL: https://<source>.example.com/<lang>/doc-<id>?ref=r<id%7>&p=<id%13> */
   private def plantedUrl: Column =

@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.GraftQuery
-import graft.engine.{GraftSession, Tables}
+import graft.engine.Shared
+import graft.engine.Tables.t
 
 /** Text analysis for training-data pipelines (north-star Tier B):
   * token counting (whitespace + BPE-ish regex), language-ID heuristic,
@@ -14,9 +15,6 @@ import graft.engine.{GraftSession, Tables}
   * UDFs), so at 100 TB they run as a single scan with no shuffle.
   */
 object TextOps {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(GraftSession.tuned(s), dir, n)
 
   /** BPE-ish pretokenizer: letter runs, digit runs, single punctuation. */
   val bpeTokenPattern = "[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\\s]"
@@ -445,53 +443,35 @@ object TextOps {
     * lesson). All products inside the sums are doc-local (≤ doc
     * chars), see OverflowAuditSpec's allowlist bound.
     *
-    * `hashedGrams = false` (the registered default) keys the
-    * (doc, n, gram) census on the gram STRING. The q_contamination
-    * precedent (xxhash64 gram keys, 15.3 → 1.6 s) was probed here and
-    * does NOT transfer: contamination could DROP the gram string
-    * after hashing, but this census still needs it — `length(g)` in
-    * the char masses and the lexicographic top-gram tie-break — so
-    * the hashed variant ships the same string bytes as a `max(g)`
-    * payload PLUS the 8-byte key, and GopherGramProbe's interleaved
-    * A/B measured it a wash at sf0.1 (3.50 vs 3.78 s) and a LOSS at
-    * sf1 (10.2 vs 9.25 s; census stage 8.3 vs 7.3 s). The variant is
-    * kept behind the flag with its equivalence spec as the record of
-    * that negative result. The r10 win here is structural instead:
-    * one consumer chain (below) halves the explode+census work.
-    *
-    * `hashedGrams = true` is PROBE-ONLY — never promote it to a gated
-    * path unchanged: it merges grams on the raw 64-bit xxhash64(g), so
-    * a within-(doc, n) collision silently merges two distinct grams
-    * (wrong count, arbitrary `max(g)` payload). Its only guards are
-    * the fixture-scale equivalence spec and GopherGramProbe; a gated
-    * use would need a collision-free key (full md5, or keep the
-    * string) plus a re-measured cost case — which the A/B above
-    * already shows does not exist.
+    * The (doc, n, gram) census keys on the gram STRING. The
+    * q_contamination precedent (xxhash64 gram keys, 15.3 → 1.6 s) was
+    * probed here and does NOT transfer: contamination could DROP the
+    * gram string after hashing, but this census still needs it —
+    * `length(g)` in the char masses and the lexicographic top-gram
+    * tie-break — so a hashed key ships the same string bytes as a
+    * `max(g)` payload PLUS the 8-byte key. The interleaved A/B measured
+    * it a wash at sf0.1 (3.50 vs 3.78 s) and a LOSS at sf1 (10.2 vs
+    * 9.25 s; census stage 8.3 vs 7.3 s; BASELINE.md), and a raw 64-bit
+    * key would also merge colliding grams. The r10 win here is
+    * structural instead: one consumer chain (below) halves the
+    * explode+census work.
     */
-  def gopherRepetitionOf(docs: DataFrame, hashedGrams: Boolean = false,
-      sharedUnits: Boolean = false): DataFrame = {
-    // sharedUnits = true is PROBE-ONLY, MEASURED OUT in r13 (the r12
-    // verdict's item 3 — the third recorded rejection for this key):
-    // one doc_id-keyed exchange of the raw text feeding all three unit
-    // censuses + the final join does satisfy every downstream
-    // ClusteredDistribution (keys all start with doc_id; executed plan
-    // confirms 2 reuse lines and no unit-level exchange), but it LOSES
-    // the interleaved A/B decisively — GopherShareProbe, same-JVM
-    // A/B/A/B: sf0.1 median 5.11 s shared vs 4.20 s unshared, sf1
-    // 14.74 vs 10.01 s (−47%). Why the §2.4 unification does not
-    // transfer here: each census RE-READS (decompresses) the full
-    // shuffled raw text from the shared exchange — 4 shuffle-read
+  def gopherRepetitionOf(docs: DataFrame): DataFrame = {
+    // the censuses stay unshared, MEASURED in r13 (the third recorded
+    // rejection for this key): one doc_id-keyed exchange of the raw
+    // text feeding all three unit censuses + the final join does
+    // satisfy every downstream ClusteredDistribution, but it LOSES the
+    // interleaved same-JVM A/B/A/B decisively: sf0.1 median 5.11 s
+    // shared vs 4.20 s unshared, sf1 14.74 vs 10.01 s (−47%;
+    // OPTIMIZATION_r13.md). Each census would RE-READ (decompress) the
+    // full shuffled raw text from the shared exchange — 4 shuffle-read
     // passes over corpus text — while the unshared censuses each scan
     // cached columnar parquet and shuffle only map-side-COMBINED unit
     // streams, which the shared shape's post-exchange complete
     // aggregation gives up. The substring/setsim precedent shuffles
     // hashed TOKENS either way; here the shared exchange carries raw
     // text, which is the heavier payload.
-    val src =
-      if (sharedUnits) docs.select(col("doc_id"), col("text"))
-        .repartition(col("doc_id"))
-      else docs
-    val base = src
+    val base = docs
       .select(col("doc_id"), coalesce(col("text"), lit("")).as("__t"),
         normalizeText(col("text")).as("__norm"))
       .withColumn("__nc", length(col("__norm")).cast("long"))
@@ -527,17 +507,9 @@ object TextOps {
           |    ELSE CAST(array() AS ARRAY<STRUCT<n: INT, g: STRING>>) END))"""
           .stripMargin)).as("p"))
       .select(col("doc_id"), col("__nc"), col("p.n").as("n"), col("p.g").as("g"))
-    val counts =
-      if (hashedGrams)
-        gramRows
-          .groupBy(col("doc_id"), col("__nc"), col("n"),
-            xxhash64(col("g")).as("__gh"))
-          .agg(count(lit(1)).as("c"), max(col("g")).as("g"))
-          .drop("__gh")
-      else
-        gramRows
-          .groupBy(col("doc_id"), col("__nc"), col("n"), col("g"))
-          .agg(count(lit(1)).as("c"))
+    val counts = gramRows
+      .groupBy(col("doc_id"), col("__nc"), col("n"), col("g"))
+      .agg(count(lit(1)).as("c"))
     // tops and dup-mass reduce the census in ONE consumer chain: a
     // per-(doc, n) aggregate computing BOTH the argmax gram and the
     // duplicated-occurrence mass, then one per-doc pivot. Through r9
@@ -546,7 +518,7 @@ object TextOps {
     // col) made the subtrees differ — ReuseExchange could not fire
     // and the gram explode + census ran TWICE (measured: the full key
     // was 15.2 s at sf1 when the census branch alone was 6.3 s;
-    // GopherGramProbe attribution). One consumer ⇒ one explode.
+    // BASELINE.md). One consumer ⇒ one explode.
     val gstat = counts
       .groupBy(col("doc_id"), col("n"))
       .agg(max(struct(col("c"), col("g"))).as("m"),
@@ -888,27 +860,15 @@ object TextOps {
   // the registered iters = 3: three registered keys (q_bpe_merge_train,
   // q_bpe_encode, q_sequence_pack_bpe) each ran the identical corpus
   // word census + 3-round greedy merge; the memo pays it once per
-  // Verify/Bench run. bpeTrainCore's rounds are already eagerly
-  // checkpointed, so the memo's only job is cross-key reuse — same
-  // lifecycle as the other memos, released by Dedup.clearSessionMemos
-  // via [[clearBpeMemo]]. Per-key numbers for the trio are attribution
-  // (the Bench docstring's shared-memo caveat).
-  private val bpeMemo = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String), (DataFrame, DataFrame)]()
-
-  private[graft] def bpeTrainShared(s: org.apache.spark.sql.SparkSession,
+  // Verify/Bench run (graft.engine.Shared `bpe.train`). bpeTrainCore's
+  // rounds are already eagerly checkpointed, so the memo's only job is
+  // cross-key reuse. Per-key numbers for the trio are attribution (the
+  // Bench docstring's shared-memo caveat).
+  private[graft] def bpeTrainShared(s: SparkSession,
       dir: String, iters: Int = 3): (DataFrame, DataFrame) = {
     require(iters == 3, s"bpeTrainShared is memoized for iters = 3 only, got $iters")
-    bpeMemo.computeIfAbsent((s, dir), _ =>
-      bpeTrainCore(t(s, dir, "documents"), iters))
-  }
-
-  private[graft] def clearBpeMemo(): Unit = {
-    val it = bpeMemo.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next(); it.remove()
-      try { e.getValue._1.unpersist(); e.getValue._2.unpersist() }
-      catch { case _: Exception => () } // a stopped session's blocks are already gone
+    Shared("bpe.train", s, dir) {
+      bpeTrainCore(t(s, dir, "documents"), iters)
     }
   }
 

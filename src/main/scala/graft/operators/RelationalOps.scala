@@ -6,6 +6,7 @@ import org.apache.spark.sql.types._
 
 import graft.GraftQuery
 import graft.engine.{GraftSession, Tables}
+import graft.engine.Tables.t
 
 /** Tier A relational operators (SURVEY.md §2.1–2.8), re-grounded on the
   * driver testdata. Shapes mirror the reference's single curated query
@@ -33,9 +34,6 @@ object RelationalOps {
   private val dec10 = DecimalType(10, 2)
   private val dec12 = DecimalType(12, 2)
   private val dec18 = DecimalType(18, 2)
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(GraftSession.tuned(s), dir, n)
 
   /** CSV fixture read with the reference's exact options: `sep=","`,
     * `header=True`, UTF-8, and NO inferSchema ⇒ all columns StringType

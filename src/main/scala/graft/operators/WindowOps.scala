@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.GraftQuery
-import graft.engine.{GraftSession, Tables}
+import graft.engine.GraftSession
+import graft.engine.Tables.t
 
 /** Sorts, limits, top-k and window functions (SURVEY.md §2.5 — absent
   * from the reference, declared Tier B there). All oracle-checked.
@@ -20,9 +21,6 @@ object WindowOps {
 
   private val dec12 = DecimalType(12, 2)
   private val dec18 = DecimalType(18, 2)
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(GraftSession.tuned(s), dir, n)
 
   /** ORDER BY … LIMIT n → TakeOrderedAndProject (no full sort at scale). */
   def sortLimit(s: SparkSession, dir: String): DataFrame =

@@ -7,6 +7,7 @@ import org.apache.spark.sql.types._
 
 import graft.GraftQuery
 import graft.engine.{GraftSession, Tables}
+import graft.engine.Tables.t
 
 /** Typed state for [[EventOps.streamingUserStateCounts]]. */
 final case class UserState(n: Long, sum: Double)
@@ -64,9 +65,6 @@ object EventOps {
 
   private val dec12 = DecimalType(12, 2)
   private val dec18 = DecimalType(18, 2)
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(GraftSession.tuned(s), dir, n)
 
   /** Tumbling 1-hour event-time windows, batch mode. Window start is
     * emitted as a formatted string: parquet timestamp annotation parity

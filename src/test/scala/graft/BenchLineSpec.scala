@@ -28,18 +28,28 @@ class BenchLineSpec extends AnyFunSuite {
     """"load":{"load1_start":3.590,"load1_end":2.950,"iowait_pct":0.004,"steal_pct":0.006}"""
   private val sf = "/root/testdata/sf0.1"
 
+  // a runaway run (every key past 99999.999 s) prints every kept time
+  // wide; the omitted maximum must still fit the 9 characters the
+  // budget reserved for it
+  private val runaway = entries.map { case (k, v) => (k, 1e9 + v) }
+
   test("final line survives a 2000-byte tail complete and parseable") {
-    val line = Bench.compactTotalLine(entries, 0, load, sf)
-    val stdoutTail = s"[info] $line\n[success] Total time: 362 s (06:02), completed Aug 18, 2026, 5:50:43 AM\n"
-    val captured = stdoutTail.takeRight(2000)
-    assert(captured.contains(line), "line must sit complete inside the 2000-byte tail")
-    val node = mapper.readTree(line)
-    assert(node.get("metric").asText() == "total")
-    assert(node.get("unit").asText() == "sec")
-    assert(node.get("sf").asText() == sf)
-    val total = entries.map(_._2).sum
-    assert(math.abs(node.get("value").asDouble() - total) < 1e-3)
-    assert(node.get("n").asInt() == 273)
+    for (input <- Seq(entries, runaway)) {
+      val line = Bench.compactTotalLine(input, 0, load, sf)
+      val stdoutTail = s"[info] $line\n[success] Total time: 362 s (06:02), completed Aug 18, 2026, 5:50:43 AM\n"
+      val captured = stdoutTail.takeRight(2000)
+      assert(captured.contains(line), "line must sit complete inside the 2000-byte tail")
+      assert(line.length <= 1650)
+      val node = mapper.readTree(line)
+      assert(node.get("metric").asText() == "total")
+      assert(node.get("unit").asText() == "sec")
+      assert(node.get("sf").asText() == sf)
+      val total = input.map(_._2).sum
+      assert(math.abs(node.get("value").asDouble() - total) < 1e-3)
+      assert(node.get("n").asInt() == 273)
+      val omittedMax = "\"omitted_max_s\":([0-9.]+)".r.findFirstMatchIn(line).get.group(1)
+      assert(omittedMax.length <= 9, s"omitted_max_s $omittedMax overruns its reserved width")
+    }
   }
 
   test("selection keeps the most expensive keys and discloses omissions") {

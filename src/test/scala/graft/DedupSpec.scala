@@ -294,7 +294,7 @@ class DedupSpec extends SparkTestBase {
 
   test("containment pair list stays output-bounded under a planted boilerplate flood (memo-safety bound)") {
     // The r12 verdict's item 6: containmentPairsShared PERSISTS the
-    // thresholded pair list (Dedup.containmentMemo), so corpus-wide
+    // thresholded pair list (Shared `containment.pairs`), so corpus-wide
     // boilerplate must not be able to inflate it quadratically — the
     // q_neardup all-pairs lesson (49.3M pairs at sf1skew) applied to
     // the directed variant. This plants a 1500-doc boilerplate flood

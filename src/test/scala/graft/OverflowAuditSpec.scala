@@ -35,11 +35,11 @@ class OverflowAuditSpec extends SparkTestBase
   // the two full-surface walks below build every registered query —
   // the session-memoized keys (near-dup trio, substring pair, reach
   // paths) each pin a lazy persisted relation + its analyzed plan in
-  // the engine's static memo maps. In the shared single-JVM test run
-  // that heap stays pinned for every LATER suite (the r12
-  // inherited-state OOM); release it when this suite is done.
+  // the engine's session memo (graft.engine.Shared). In the shared
+  // single-JVM test run that heap stays pinned for every LATER suite
+  // (the r12 inherited-state OOM); release it when this suite is done.
   override def afterAll(): Unit = {
-    try graft.ext.Dedup.clearSessionMemos()
+    try graft.engine.Shared.clear()
     finally super.afterAll()
   }
 

@@ -46,7 +46,8 @@ class SimilaritySpec extends SparkTestBase {
   }
 
   test("ANN recall@10 vs exact top-10 at the registered configs (both oracle gates rely on 1.0)") {
-    // both fixture SFs the driver exercises; sf0.1 is covered by AnnTune
+    // both fixture SFs the oracle gate reads; the sf0.1 recall is recorded
+    // at Similarity.lshTopkQuery and ivfTopkQuery
     for (sf <- Seq("sf0.001", "sf0.01")) {
       val e = spark.read.parquet(s"/root/testdata/$sf/embeddings.parquet")
       def ids(df: org.apache.spark.sql.DataFrame): Set[Long] =
