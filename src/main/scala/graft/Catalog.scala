@@ -2,12 +2,16 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.engine.GraftSession
+
 /** One registrable operator demonstration.
   *
   * @param name   key in `SparkEntry.queries` (SURVEY.md §2 "Key" column)
   * @param doc    what it demonstrates + reference citation
-  * @param build  (session, sfDir) => result; must be deterministic
-  *               (explicit ORDER BY) when `oracle` is present
+  * @param builder (session, sfDir) => result, run by [[build]] on a
+  *               session that already carries the graft contract; must
+  *               be deterministic (explicit ORDER BY) when `oracle` is
+  *               present
   * @param oracle DuckDB SQL over the same testdata tables producing the
   *               identical result (names, types, row order). None ⇒ the
   *               driver records a weaker rows-only check.
@@ -15,8 +19,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 final case class GraftQuery(
     name: String,
     doc: String,
-    build: (SparkSession, String) => DataFrame,
-    oracle: Option[String])
+    private val builder: (SparkSession, String) => DataFrame,
+    oracle: Option[String]) {
+
+  /** Build the query on `spark`: applies [[GraftSession.tuned]] first,
+    * so every caller (Bench, Verify, the specs, any library user) gets
+    * the same session semantics and graft_* functions.
+    */
+  def build(spark: SparkSession, sfDir: String): DataFrame =
+    builder(GraftSession.tuned(spark), sfDir)
+}
 
 /** Aggregates every operator family's registrable queries. */
 object Catalog {

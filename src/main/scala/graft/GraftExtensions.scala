@@ -1,11 +1,6 @@
 package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
-import org.apache.spark.sql.types.IntegerType
-
-import graft.functions._
 
 /** Library packaging: register every graft_* native function through the
   * standard extension point, so a user enables the whole function
@@ -17,136 +12,15 @@ import graft.functions._
   *
   * (no code dependency on [[graft.engine.GraftSession]] needed). The
   * engine's own sessions get the same functions via
-  * `HashExprs.register`; both paths build identical expression trees.
+  * `HashExprs.register`; both paths read the one table
+  * [[graft.functions.HashExprs.functions]].
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-
-  private def info(name: String, usage: String) =
-    new ExpressionInfo("graft.functions.HashExprs", null, name, usage, "")
-
-  private def intLit(e: Expression, what: String): Int = e match {
-    case Literal(k: Int, IntegerType) => k
-    case _ => throw new IllegalArgumentException(s"$what must be a literal int")
-  }
 
   override def apply(ext: SparkSessionExtensions): Unit = {
     // optimizer surface: builtin Jaccard composition -> one-pass native
     // expression (see graft.plans.JaccardRewrite)
     ext.injectOptimizerRule(_ => graft.plans.JaccardRewrite)
-    ext.injectFunction((FunctionIdentifier("graft_simhash64"),
-      info("graft_simhash64", "graft_simhash64(array<string>) - 64-bit SimHash"),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(a) => SimHash64Expr(a)
-        case _ => throw new IllegalArgumentException("graft_simhash64(arr)")
-      }))
-    ext.injectFunction((FunctionIdentifier("graft_norm_text"),
-      info("graft_norm_text", "graft_norm_text(string) - single-pass lower/strip/collapse/trim normalization"),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(c) => NormalizeTextExpr(c)
-        case _ => throw new IllegalArgumentException("graft_norm_text(string)")
-      }))
-    ext.injectFunction((FunctionIdentifier("graft_minhash_sig"),
-      info("graft_minhash_sig", "graft_minhash_sig(array<string|bigint>[, k]) - MinHash signature"),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(arr) => MinHashSigExpr(arr, 16)
-        case Seq(arr, k) => MinHashSigExpr(arr, intLit(k, "k"))
-        case _ => throw new IllegalArgumentException("graft_minhash_sig(arr[, k])")
-      }))
-    ext.injectFunction((FunctionIdentifier("graft_shingle_hashes"),
-      info("graft_shingle_hashes", "graft_shingle_hashes(array<string>, n) - distinct n-gram shingle hashes"),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(a, n) => ShingleHashExpr(a, intLit(n, "n"))
-        case _ => throw new IllegalArgumentException("graft_shingle_hashes(arr, n)")
-      }))
-    ext.injectFunction((FunctionIdentifier("graft_shingle_hashes_all"),
-      info("graft_shingle_hashes_all", "graft_shingle_hashes_all(array<string>, n) - positional n-gram shingle hashes"),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(a, n) => ShingleHashExpr(a, intLit(n, "n"), dedupe = false)
-        case _ => throw new IllegalArgumentException("graft_shingle_hashes_all(arr, n)")
-      }))
-    ext.injectFunction((FunctionIdentifier("graft_cdc_boundaries"),
-      info("graft_cdc_boundaries", "graft_cdc_boundaries(binary, maskMod) - content-defined chunk boundary positions"),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(b, m) => CdcBoundariesExpr(b, intLit(m, "maskMod"))
-        case _ => throw new IllegalArgumentException("graft_cdc_boundaries(binary, maskMod)")
-      }))
-    ext.injectFunction((FunctionIdentifier("graft_winnow"),
-      info("graft_winnow", "graft_winnow(array<bigint>, w) - winnowing fingerprint selection"),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(a, w) => WinnowExpr(a, intLit(w, "w"))
-        case _ => throw new IllegalArgumentException("graft_winnow(arr, w)")
-      }))
-    ext.injectFunction((FunctionIdentifier("graft_cosine"),
-      info("graft_cosine", "graft_cosine(a, b) - cosine similarity of numeric arrays"),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(a, b) => CosineExpr(a, b)
-        case _ => throw new IllegalArgumentException("graft_cosine(a, b)")
-      }))
-    ext.injectFunction((FunctionIdentifier("graft_jaccard"),
-      info("graft_jaccard", "graft_jaccard(a, b) - exact set-Jaccard of two arrays"),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(a, b) => JaccardExpr(a, b)
-        case _ => throw new IllegalArgumentException("graft_jaccard(a, b)")
-      }))
-    ext.injectFunction((FunctionIdentifier("graft_srp_bucket"),
-      info("graft_srp_bucket", "graft_srp_bucket(vec, planes) - sign-random-projection bucket id"),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(v, p) => SrpBucketExpr(v, p)
-        case _ => throw new IllegalArgumentException("graft_srp_bucket(vec, planes)")
-      }))
-    ext.injectFunction((FunctionIdentifier("graft_luhn"),
-      info("graft_luhn", "graft_luhn(string) - Luhn checksum validation (13-19 digits, space/dash tolerated)"),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(c) => LuhnExpr(c)
-        case _ => throw new IllegalArgumentException("graft_luhn(string)")
-      }))
-    ext.injectFunction((FunctionIdentifier("graft_zorder"),
-      info("graft_zorder", "graft_zorder(x, y) - 2-D Morton (Z-order) code"),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(x, y) => ZOrderExpr(x, y)
-        case _ => throw new IllegalArgumentException("graft_zorder(x, y)")
-      }))
-    ext.injectFunction((FunctionIdentifier("graft_downsample"),
-      info("graft_downsample", "graft_downsample(binary, k) - every k-th byte (resize-kernel slot)"),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(b, k) => DownsampleExpr(b, intLit(k, "k"))
-        case _ => throw new IllegalArgumentException("graft_downsample(binary, k)")
-      }))
-    ext.injectFunction((FunctionIdentifier("graft_jaro_winkler"),
-      info("graft_jaro_winkler", "graft_jaro_winkler(s1, s2) - Jaro-Winkler similarity in [0,1]"),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(a, b) => JaroWinklerExpr(a, b)
-        case _ => throw new IllegalArgumentException("graft_jaro_winkler(s1, s2)")
-      }))
-    ext.injectFunction((FunctionIdentifier("graft_phash64"),
-      info("graft_phash64", "graft_phash64(binary) - 64-bit perceptual hash over byte 4-gram shingles"),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(b) => Phash64Expr(b)
-        case _ => throw new IllegalArgumentException("graft_phash64(binary)")
-      }))
-    ext.injectFunction((FunctionIdentifier("graft_pq_encode"),
-      info("graft_pq_encode", "graft_pq_encode(vec, codebooks) - packed product-quantization codes"),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(v, cb) => PqEncodeExpr(v, cb)
-        case _ => throw new IllegalArgumentException("graft_pq_encode(vec, codebooks)")
-      }))
-    ext.injectFunction((FunctionIdentifier("graft_hilbert"),
-      info("graft_hilbert", "graft_hilbert(x, y) - order-10 2-D Hilbert curve index"),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(x, y) => HilbertExpr(x, y)
-        case _ => throw new IllegalArgumentException("graft_hilbert(x, y)")
-      }))
-    ext.injectFunction((FunctionIdentifier("graft_image_dims"),
-      info("graft_image_dims", "graft_image_dims(binary) - (width<<32)|height from a JPEG SOF / PNG IHDR header, -1 if unparseable"),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(b) => ImageDimsExpr(b)
-        case _ => throw new IllegalArgumentException("graft_image_dims(binary)")
-      }))
-    ext.injectFunction((FunctionIdentifier("graft_edit1"),
-      info("graft_edit1", "graft_edit1(s1, s2) - true iff levenshtein distance is exactly 1"),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(a, b) => Edit1Expr(a, b)
-        case _ => throw new IllegalArgumentException("graft_edit1(s1, s2)")
-      }))
+    graft.functions.HashExprs.functions.foreach(ext.injectFunction)
   }
 }

@@ -11,9 +11,11 @@ object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * The reference's curated query shape (k8s/codes/variables.py:18-89):
     * 3-way UNION ALL + five-way left-outer join chain + casts/NVL.
+    * Built through the Catalog, so a plain session gets the graft
+    * session contract like every other key.
     */
   def entry(spark: SparkSession): DataFrame =
-    operators.RelationalOps.joinChain(spark, "/root/testdata/sf0.001")
+    Catalog.byName("q_join_chain").build(spark, "/root/testdata/sf0.001")
 
   /** One entry per implemented operator from SURVEY.md §2.
     * Routed through [[Catalog.byName]] (not a bare `.toMap`): a
@@ -22,7 +24,7 @@ object SparkEntry {
     * correctness gate and the bench.
     */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Catalog.byName.map { case (n, q) => n -> q.build }
+    Catalog.byName.map { case (n, q) => n -> (q.build _) }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted keys get a rows-only check.

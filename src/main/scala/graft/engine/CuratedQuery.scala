@@ -124,7 +124,6 @@ object CuratedQuery {
     * ORDER BY.
     */
   def curatedQuery(s: SparkSession, dir: String): DataFrame = {
-    GraftSession.tuned(s)
     views.foreach { v =>
       CsvToParquet.readCsvAllString(s, s"$fixtureDir/AdventureWorks_$v.csv")
         .createOrReplaceTempView(v)

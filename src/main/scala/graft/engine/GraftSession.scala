@@ -8,11 +8,21 @@ import org.apache.spark.sql.SparkSession
   * k8s/dags/etl_aws_vini.py:81) where casts are lenient: `cast('N/A' as
   * int)` yields NULL instead of throwing. Its all-string CSV ingest +
   * explicit-CAST curated query (k8s/codes/variables.py:26-60) depends on
-  * that. Spark 4.x defaults `spark.sql.ansi.enabled=true`, so every graft
-  * query builder routes through [[tuned]] to pin the lenient semantics,
-  * UTC, and AQE (mirroring k8s/codes/transformation.py:57-75 at the
-  * semantic level only — executor elasticity confs are a cluster-profile
-  * concern, not session semantics).
+  * that. Spark 4.x defaults `spark.sql.ansi.enabled=true`, so [[tuned]]
+  * pins the lenient semantics, UTC, and AQE (mirroring
+  * k8s/codes/transformation.py:57-75 at the semantic level only —
+  * executor elasticity confs are a cluster-profile concern, not session
+  * semantics).
+  *
+  * Like the reference, which sets its session semantics once where it
+  * builds the session, the contract is applied only where a session
+  * enters the library — five places:
+  *   - `GraftQuery.build`, for every Catalog key, whoever builds it;
+  *   - `CsvToParquet.readCsvAllString`;
+  *   - `CuratedQuery.transform`;
+  *   - `TrainingPipeline.run` and `TrainingPipeline.streamingIngest`.
+  * Everything below them (query builders, `Tables.load`, the operator
+  * functions) runs on a session that already carries it.
   */
 object GraftSession {
 
@@ -32,8 +42,8 @@ object GraftSession {
     c.set("spark.sql.autoBroadcastJoinThreshold", (32L * 1024 * 1024).toString)
     // Recursive CTEs (GraphOps.reachPaths): depth-3 path enumeration on
     // the decade fixtures exceeds the 1M-row default runaway guard. Set
-    // HERE — the documented session contract every query routes through
-    // — rather than mutated ad hoc inside one query builder.
+    // HERE — the documented session contract — rather than mutated ad
+    // hoc inside one query builder.
     c.set("spark.sql.cteRecursionRowLimit", "20000000")
     graft.functions.HashExprs.register(spark)
     // session-level twin of GraftExtensions.injectOptimizerRule (the

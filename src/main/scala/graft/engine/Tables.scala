@@ -15,6 +15,11 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** The one table loader every query module reads its inputs with
+    * (`import graft.engine.Tables.load`). It does not tune the session:
+    * the caller's session already carries [[GraftSession.tuned]]'s
+    * contract (applied where a session enters the library).
+    */
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val df = spark.read.parquet(s"$sfDir/$name.parquet")
     // events.ts normalizes to session-zoned TIMESTAMP (micros) whatever
@@ -26,12 +31,6 @@ object Tables {
     // (cast reinterprets in the session's pinned UTC — same instants).
     if (name == "events") normalizeEventTs(df) else df
   }
-
-  /** [[load]] on a [[GraftSession.tuned]] session: the loader every
-    * query module reads its inputs with (`import graft.engine.Tables.t`).
-    */
-  def t(s: SparkSession, dir: String, name: String): DataFrame =
-    load(GraftSession.tuned(s), dir, name)
 
   /** ONE definition of the events.ts physical-type adaptation (shared
     * with the streaming source, which reads the parquet directly).

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 import graft.GraftQuery
-import graft.engine.Tables.t
+import graft.engine.Tables.load
 import graft.functions.TextOps
 
 /** Training-corpus cleaning operators (north-star Tier B): PII
@@ -75,7 +75,7 @@ object Cleaning {
       when(id % 7 === 0,
         concat(lit(" call 555-"), lpad((id % 10000).cast("string"), 4, "0")))
         .otherwise(lit("")))
-    t(s, dir, "documents")
+    load(s, dir, "documents")
       .select(id, concat(col("text"), contact).as("full_text"))
       .select(
         id,
@@ -136,7 +136,7 @@ object Cleaning {
     * [[CleaningSpec]] asserts hashed == string on the fixture.
     */
   def contaminationReport(s: SparkSession, dir: String): DataFrame =
-    contamination(t(s, dir, "documents"), "doc_id", "text",
+    contamination(load(s, dir, "documents"), "doc_id", "text",
       evalPred = col("doc_id") % 10 === 5, hashed = true, cacheSets = true)
 
   // ---- repetition quality signals (Gopher-rule family) -----------------
@@ -152,7 +152,7 @@ object Cleaning {
     // persist skips the second normalize+split pass over the corpus.
     // Session-bounded cache with a stable logical plan (CacheManager
     // reuses the entry across rebuilds of this registered query).
-    val toks = t(s, dir, "documents")
+    val toks = load(s, dir, "documents")
       .select(col("doc_id"), split(TextOps.normalizeText(col("text")), " ").as("toks"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val words = toks.select(col("doc_id"), explode(col("toks")).as("tok"))
@@ -206,7 +206,7 @@ object Cleaning {
     * handful of single-task sort buffers.
     */
   def outlierDocs(s: SparkSession, dir: String): DataFrame =
-    outlierFlags(t(s, dir, "documents")).orderBy("doc_id")
+    outlierFlags(load(s, dir, "documents")).orderBy("doc_id")
 
   /** df-level core of [[outlierDocs]] (needs doc_id, lang, n_chars) —
     * reused by [[TrainingPipeline]]'s quality gate.
@@ -248,7 +248,7 @@ object Cleaning {
     * [[outlierDocs]]: tiny per-lang table → map-side join, no window.
     */
   def winsorize(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
+    val docs = load(s, dir, "documents")
     val pct = docs.groupBy("lang").agg(
       expr("percentile(n_chars, 0.05)").cast(DecimalType(18, 6))
         .cast(DoubleType).as("p05"),
@@ -271,7 +271,7 @@ object Cleaning {
     * low-cardinality lang key.
     */
   def madStats(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
+    val docs = load(s, dir, "documents")
     // count rides the median aggregation: two scans total, not three
     val med = docs.groupBy("lang").agg(
       expr("percentile(n_chars, 0.5)").cast(DecimalType(18, 6))
@@ -300,7 +300,7 @@ object Cleaning {
     * position-doubled digit sum). Exactly one candidate may pass.
     */
   def luhnCheckDigits(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
+    load(s, dir, "documents")
       .withColumn("ds", concat(lit("4"),
         lpad((col("doc_id") % 100000000L).cast("string"), 14, "0")))
       .withColumn("valids", expr(
@@ -364,7 +364,7 @@ object Cleaning {
     * definition.
     */
   def classifierRawScores(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
+    load(s, dir, "documents")
       .select(col("doc_id"),
         explode(split(TextOps.normalizeText(col("text")), " ")).as("tok"))
       .withColumn("bucket",
@@ -393,7 +393,7 @@ object Cleaning {
     */
   def classifierEval(s: SparkSession, dir: String): DataFrame = {
     val labeled = classifierRawScores(s, dir)
-      .join(t(s, dir, "documents")
+      .join(load(s, dir, "documents")
         .select(col("doc_id"), (col("lang") === "en").cast("long").as("y")),
         "doc_id")
       .select(col("y"), (col("sum_milli") > 0).cast("long").as("p"),
@@ -468,7 +468,7 @@ object Cleaning {
     * where a mid-plan sort would be dead weight).
     */
   private def surprisalScores(s: SparkSession, dir: String): DataFrame = {
-    val toks = t(s, dir, "documents")
+    val toks = load(s, dir, "documents")
       .select(col("doc_id"),
         explode(split(TextOps.normalizeText(col("text")), " ")).as("tok"))
     val counts = toks.groupBy("tok").agg(count(lit(1)).as("cnt"))
@@ -502,7 +502,7 @@ object Cleaning {
     * row-local hash test, no materialized split tables.
     */
   def heldoutSurprisal(s: SparkSession, dir: String): DataFrame = {
-    val toks = t(s, dir, "documents")
+    val toks = load(s, dir, "documents")
       .select(col("doc_id"),
         explode(split(TextOps.normalizeText(col("text")), " ")).as("tok"))
       .where(col("tok") =!= "")
@@ -606,7 +606,7 @@ object Cleaning {
     * scores.
     */
   private def bigramPositions(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
+    load(s, dir, "documents")
       .select(col("doc_id"),
         split(TextOps.normalizeText(col("text")), " ").as("toks"))
       .where(size(col("toks")) >= 2)
@@ -722,7 +722,7 @@ object Cleaning {
     * that moves).
     */
   def noveltyScores(s: SparkSession, dir: String): DataFrame =
-    noveltyOf(t(s, dir, "documents"))
+    noveltyOf(load(s, dir, "documents"))
 
   /** df-level core of [[noveltyScores]] (specs plant corpora). */
   def noveltyOf(docs: DataFrame): DataFrame = {
@@ -806,7 +806,7 @@ object Cleaning {
     * overflow sum.
     */
   def dataQualityReport(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
+    val docs = load(s, dir, "documents")
     def viol(c: Column): Column = sum(when(c, 1L).otherwise(0L))
     val rowRules = docs.agg(
       count(lit(1)).as("n"),
@@ -952,7 +952,7 @@ object Cleaning {
   def calibrationReport(s: SparkSession, dir: String,
       buckets: Int = 10): DataFrame = {
     val labeled = classifierRawScores(s, dir)
-      .join(t(s, dir, "documents")
+      .join(load(s, dir, "documents")
         .select(col("doc_id"), (col("lang") === "en").cast("long").as("y")),
         "doc_id")
       .select(col("y"),
@@ -1173,7 +1173,7 @@ object Cleaning {
   val queries: Seq[GraftQuery] = Seq(
     GraftQuery("q_k_anonymity",
       "k-anonymity audit: quasi-identifier equivalence-class sizes + violation flags + table-level k",
-      (s, dir) => kAnonymity(t(s, dir, "customer")),
+      (s, dir) => kAnonymity(load(s, dir, "customer")),
       Some(
         """WITH q AS (
           |  SELECT c_nationkey, c_mktsegment,
@@ -1189,7 +1189,7 @@ object Cleaning {
           |ORDER BY c_nationkey, c_mktsegment, bal_bucket""".stripMargin)),
     GraftQuery("q_benford",
       "Benford first-digit conformance: exact-cents digit counts vs log10(1+1/d), per-digit chi-square terms",
-      (s, dir) => benford(t(s, dir, "orders"), "o_totalprice"),
+      (s, dir) => benford(load(s, dir, "orders"), "o_totalprice"),
       Some(
         s"""WITH d AS (
            |  SELECT CAST(substring(CAST(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS VARCHAR), 1, 1) AS INT) AS digit
@@ -1204,7 +1204,7 @@ object Cleaning {
            |FROM c, t ORDER BY digit""".stripMargin)),
     GraftQuery("q_ks_test",
       "two-sample Kolmogorov-Smirnov drift stat over doc lengths (en vs rest): domain-bounded CDF cumsums",
-      (s, dir) => ksTest(t(s, dir, "documents")),
+      (s, dir) => ksTest(load(s, dir, "documents")),
       Some(
         """WITH b AS (
           |  SELECT n_chars AS bucket,
@@ -1227,7 +1227,7 @@ object Cleaning {
           |ORDER BY ks_stat DESC, ks_at_bucket LIMIT 1""".stripMargin)),
     GraftQuery("q_mann_whitney",
       "tie-corrected two-sample Mann-Whitney U over doc lengths (en vs rest): exact double-midrank integers, DECIMAL/HUGEINT widening, one shared IEEE z tree",
-      (s, dir) => mannWhitney(t(s, dir, "documents")),
+      (s, dir) => mannWhitney(load(s, dir, "documents")),
       Some(
         """WITH b AS (
           |  SELECT n_chars AS v,
@@ -1261,7 +1261,7 @@ object Cleaning {
           |FROM s ORDER BY n1""".stripMargin)),
     GraftQuery("q_quantile_norm",
       "within-source quantile normalization to uniform [0,1] (mid-rank CDF over the distinct-value domain)",
-      (s, dir) => quantileNorm(t(s, dir, "documents")),
+      (s, dir) => quantileNorm(load(s, dir, "documents")),
       Some(
         """WITH v AS (
           |  SELECT source, n_chars AS val, count(*) AS cnt
@@ -1436,7 +1436,7 @@ object Cleaning {
            |FROM b GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
     GraftQuery("q_domain_shift",
       "domain-shift report: top-20 tokens most over-represented in the en slice vs the rest (per-term smoothed KL decomposition, bit-quantized exact)",
-      (s, dir) => domainShift(t(s, dir, "documents"), "text", "lang", "en", 20),
+      (s, dir) => domainShift(load(s, dir, "documents"), "text", "lang", "en", 20),
       Some(
         s"""WITH toks AS (
            |  SELECT (lang = 'en') AS in_p, unnest($normToksSql) AS tok
@@ -1570,7 +1570,7 @@ object Cleaning {
            |FROM scored GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
     GraftQuery("q_l_diversity",
       "l-diversity audit: distinct sensitive values per QI class + violation flags + table-level min l",
-      (s, dir) => lDiversity(t(s, dir, "customer")),
+      (s, dir) => lDiversity(load(s, dir, "customer")),
       Some(
         """WITH q AS (
           |  SELECT c_nationkey, c_mktsegment,

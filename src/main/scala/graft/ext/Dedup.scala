@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.GraftQuery
 import graft.engine.Shared
-import graft.engine.Tables.t
+import graft.engine.Tables.load
 import graft.functions.TextOps
 
 /** Deduplication for training-data pipelines (north-star Tier B):
@@ -30,7 +30,7 @@ object Dedup {
     * dropDuplicates but with a deterministic survivor.
     */
   def exactDedup(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
+    load(s, dir, "documents")
       // group on the 16-byte BINARY digest (halves shuffle key bytes);
       // the hex rendering the oracle compares is applied after the agg
       .groupBy(unhex(md5(col("text"))).as("__k"))
@@ -41,7 +41,7 @@ object Dedup {
 
   /** DISTINCT on a projection (dropDuplicates semantics). */
   def distinctKeys(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
+    load(s, dir, "lineitem")
       .select("l_returnflag", "l_linestatus")
       .distinct()
       .orderBy("l_returnflag", "l_linestatus")
@@ -54,7 +54,7 @@ object Dedup {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("user_id"))
       .orderBy(col("ts").desc, col("event_id").desc)
-    t(s, dir, "events")
+    load(s, dir, "events")
       .withColumn("rn", row_number().over(w))
       .where(col("rn") === 1)
       .select(
@@ -75,14 +75,14 @@ object Dedup {
     * intentional inefficiency rather than the operator itself.
     */
   def approxDistinct(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
+    load(s, dir, "lineitem")
       .agg(approx_count_distinct(col("l_orderkey"), rsd = 0.02).as("approx_orders"))
 
   /** Exact distinct count — the oracle-checkable companion of
     * [[approxDistinct]] (and the accuracy baseline its unit test uses).
     */
   def exactDistinct(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
+    load(s, dir, "lineitem")
       .agg(countDistinct(col("l_orderkey")).as("exact_orders"))
 
   /** Sketch-guarantee twin for [[approxDistinct]] — the
@@ -97,7 +97,7 @@ object Dedup {
     * [[exactDistinct]] are registered separately.
     */
   def approxDistinctTwin(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem")
+    val li = load(s, dir, "lineitem")
     li.agg(approx_count_distinct(col("l_orderkey"), rsd = 0.02).as("approx"))
       .crossJoin(li.agg(countDistinct(col("l_orderkey")).as("exact")))
       .select(
@@ -119,7 +119,7 @@ object Dedup {
     * ships. Two same-key hash aggregations; AQE coalesces them.
     */
   def bitmapDistinct(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
+    load(s, dir, "lineitem")
       .groupBy(col("l_returnflag"),
         expr("bitmap_bucket_number(l_orderkey)").as("bkt"))
       .agg(expr("bitmap_construct_agg(bitmap_bit_position(l_orderkey))")
@@ -421,7 +421,7 @@ object Dedup {
   }
 
   def setSimQuery(s: SparkSession, dir: String): DataFrame =
-    setSimJoin(t(s, dir, "documents"), "text", "doc_id")
+    setSimJoin(load(s, dir, "documents"), "text", "doc_id")
 
   /** EXACT containment join (asymmetric Jaccard, |A∩B| / |A|): directed
     * near-dup detection — "A is quoted/embedded in B" — which symmetric
@@ -654,7 +654,7 @@ object Dedup {
     nearDupPairsShared(s, dir)._2.orderBy("id1", "id2")
 
   def simhashQuery(s: SparkSession, dir: String): DataFrame =
-    simhashPairs(t(s, dir, "documents"), "text", "doc_id",
+    simhashPairs(load(s, dir, "documents"), "text", "doc_id",
       cacheHashed = true)
 
   /** md5-SimHash blocking twin: same pigeonhole pipeline as
@@ -670,7 +670,7 @@ object Dedup {
     */
   def simhashMd5Twin(s: SparkSession, dir: String): DataFrame =
     hammingBlockedPairs(
-      md5Simhash32(t(s, dir, "documents").where(col("doc_id") < 500),
+      md5Simhash32(load(s, dir, "documents").where(col("doc_id") < 500),
         "text", "doc_id"),
       "doc_id", "simhash32", totalBits = 32, maxHamming = 3,
       // NO cacheHashed, unlike the phash twin: this corpus is capped at
@@ -686,7 +686,7 @@ object Dedup {
     * non-empty on this corpus (doc lengths straddle 40 tokens).
     */
   def explodeOuter(s: SparkSession, dir: String): DataFrame =
-    shingleSets(t(s, dir, "documents"), "text", 40)
+    shingleSets(load(s, dir, "documents"), "text", 40)
       .select(col("doc_id"), explode_outer(col("shingles")).as("gram40"))
       .orderBy(col("doc_id"), col("gram40").asc_nulls_first)
 
@@ -706,7 +706,7 @@ object Dedup {
     // fixture) — the HOF string-shingle construction, not the
     // normalize, is the expensive half here (contrast editDistance,
     // whose persist became a wash and was removed).
-    val sets = shingleSets(t(s, dir, "documents"), "text", 2)
+    val sets = shingleSets(load(s, dir, "documents"), "text", 2)
       .select(col("doc_id"), col("shingles"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val a = sets.select(col("doc_id").as("id1"), col("shingles").as("sh1"))
@@ -763,7 +763,7 @@ object Dedup {
     * per upstream partition), never as a skewed raw-row partition.
     */
   def spanDedupStats(s: SparkSession, dir: String): DataFrame =
-    tokenSpans(t(s, dir, "documents"), "text", 8, 5)
+    tokenSpans(load(s, dir, "documents"), "text", 8, 5)
       .where(col("eligible"))
       .groupBy(col("span"), col("doc_id"))
       .agg(count(lit(1)).as("n"))
@@ -796,7 +796,7 @@ object Dedup {
     * shares). Session-bounded, stable-plan cache.
     */
   def spanDedupApply(s: SparkSession, dir: String): DataFrame = {
-    val spans = tokenSpans(t(s, dir, "documents"), "text", 8, 5)
+    val spans = tokenSpans(load(s, dir, "documents"), "text", 8, 5)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val eligible = spans.where(col("eligible"))
     val firsts = eligible
@@ -1076,7 +1076,7 @@ object Dedup {
     * cross-split near-dups at every SF).
     */
   def incrementalQuery(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
+    val docs = load(s, dir, "documents")
     incrementalNearDups(
       docs.where(col("doc_id") < 250), docs.where(col("doc_id") >= 250),
       "text", "doc_id", cacheSets = true)
@@ -1177,7 +1177,7 @@ object Dedup {
   private[graft] def containmentPairsShared(s: SparkSession,
       dir: String): DataFrame =
     Shared("containment.pairs", s, dir) {
-      containmentJoin(t(s, dir, "documents"), "text", "doc_id",
+      containmentJoin(load(s, dir, "documents"), "text", "doc_id",
         sorted = false)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
@@ -1256,7 +1256,7 @@ object Dedup {
     // un-memoized substrDupPosOf directly)
     require(L == 30, s"substrDupPosShared is memoized for L=30 only, got $L")
     Shared("substr.dupPos", s, dir) {
-      substrDupPosOf(t(s, dir, "documents"), "text", "doc_id", L)
+      substrDupPosOf(load(s, dir, "documents"), "text", "doc_id", L)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
   }
@@ -1277,7 +1277,7 @@ object Dedup {
   private def nearDupPairsShared(s: SparkSession,
       dir: String): (DataFrame, DataFrame) =
     Shared("nearDup.pairs", s, dir) {
-      val (sets, verified) = minhashPairsCore(t(s, dir, "documents"),
+      val (sets, verified) = minhashPairsCore(load(s, dir, "documents"),
         "text", "doc_id", shingleN = 2, numHashes = 16, bands = 8,
         threshold = 0.5, cacheSets = true)
       (sets, verified.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
@@ -1331,7 +1331,7 @@ object Dedup {
     val removed = nearDupLabels(s, dir)
       .where(col("id") =!= col("comp"))
       .select(col("id").as("doc_id"))
-    t(s, dir, "documents")
+    load(s, dir, "documents")
       .join(broadcast(removed), Seq("doc_id"), "left_anti")
       .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
       .orderBy("doc_id")
@@ -1571,7 +1571,7 @@ object Dedup {
   val queries: Seq[GraftQuery] = Seq(
     GraftQuery("q_line_dedup",
       "C4-style line-grain corpus dedup + reassembly: non-blank repeated lines survive only at their first (doc_id, line_idx) occurrence; docs rebuilt from surviving lines",
-      (s, dir) => lineDedup(t(s, dir, "documents"), cache = true),
+      (s, dir) => lineDedup(load(s, dir, "documents"), cache = true),
       Some(
         """WITH d AS (SELECT doc_id, coalesce(text, '') AS t FROM documents),
           |ls AS (SELECT doc_id, str_split(t, chr(10)) AS ll FROM d),
@@ -1778,7 +1778,7 @@ object Dedup {
            |ORDER BY doc_id""".stripMargin)),
     GraftQuery("q_substring_dup_spans",
       "exact duplicated-substring spans >= 30 chars (Lee et al. ExactSubstr, rolling L-gram re-expression): per-doc island count, gram count, duplicated chars, ratio",
-      (s, dir) => substringDupSpans(t(s, dir, "documents"), "text", "doc_id",
+      (s, dir) => substringDupSpans(load(s, dir, "documents"), "text", "doc_id",
         sharedDupPos = Some(substrDupPosShared(s, dir))),
       Some(
         """WITH g AS (
@@ -1814,7 +1814,7 @@ object Dedup {
           |ORDER BY sp.doc_id""".stripMargin)),
     GraftQuery("q_substring_dedup_apply",
       "exact-substring dedup APPLY (Lee et al. removal): cut duplicated islands unless they hold a gram's corpus-first occurrence; per-doc cut census + rebuilt-text md5",
-      (s, dir) => substringDedupApply(t(s, dir, "documents"), "text", "doc_id",
+      (s, dir) => substringDedupApply(load(s, dir, "documents"), "text", "doc_id",
         sharedDupPos = Some(substrDupPosShared(s, dir))),
       Some(
         """WITH g AS (

@@ -5,8 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.GraftQuery
-import graft.engine.{GraftSession, Shared}
-import graft.engine.Tables.t
+import graft.engine.Shared
+import graft.engine.Tables.load
 
 /** Graph-shaped corpus operators beyond connected components
   * ([[Dedup.connectedComponents]]): link-graph construction from event
@@ -214,7 +214,7 @@ object GraphOps {
     // Dedup.containmentPairsShared) — persisted ⇒ already
     // materialization-cut, so the df-level localCheckpoint above is
     // redundant here
-    docPageRankOnPairs(t(s, dir, "documents"),
+    docPageRankOnPairs(load(s, dir, "documents"),
       Dedup.containmentPairsShared(s, dir), iters = 3)
 
   /** TextRank keyword extraction (Mihalcea & Tarau 2004): PageRank over
@@ -263,7 +263,7 @@ object GraphOps {
   }
 
   def textRankQuery(s: SparkSession, dir: String): DataFrame =
-    textRankKeywords(t(s, dir, "documents"), iters = 3, k = 50)
+    textRankKeywords(load(s, dir, "documents"), iters = 3, k = 50)
 
   /** Undirected simple graph from the transition edges: one canonical
     * (a < b) row per linked pair, self-loops dropped. Shared by the
@@ -618,7 +618,7 @@ object GraphOps {
     */
   private[graft] def sharedEdges(s: SparkSession, dir: String): DataFrame =
     Shared("graph.edges", s, dir) {
-      transitionEdges(t(s, dir, "events")).localCheckpoint()
+      transitionEdges(load(s, dir, "events")).localCheckpoint()
     }
 
   /** The eagerly-checkpointed per-(session, dir) node universe (every
@@ -628,14 +628,15 @@ object GraphOps {
     */
   private[graft] def sharedNodes(s: SparkSession, dir: String): DataFrame =
     Shared("graph.nodes", s, dir) {
-      t(s, dir, "events")
+      load(s, dir, "events")
         .select(get_json_object(col("props"), "$.k").cast("int").as("node"))
         .where(col("node").isNotNull).distinct()
         .localCheckpoint()
     }
 
   def reachPaths(s: SparkSession, dir: String): DataFrame = {
-    GraftSession.tuned(s) // also lifts spark.sql.cteRecursionRowLimit
+    // spark.sql.cteRecursionRowLimit comes lifted with the session
+    // contract (GraftSession).
     // UnionLoop re-executes the recursive step's whole subtree per
     // level, and a CTE inlines into that step — leaving the edge
     // pipeline (window + aggregate over the events table) to run once

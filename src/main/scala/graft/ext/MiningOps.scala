@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.GraftQuery
 import graft.engine.Shared
-import graft.engine.Tables.t
+import graft.engine.Tables.load
 
 /** Frequent-itemset mining over order baskets (Agrawal & Srikant 1994's
   * support/confidence/lift vocabulary, pair-level) — the co-occurrence
@@ -184,7 +184,7 @@ object MiningOps {
   // materialization-cut — the memo's only job is cross-key reuse.
   private def typoNamePairsShared(s: SparkSession, dir: String): DataFrame =
     Shared("typo.namePairs", s, dir) {
-      typoNamePairs(t(s, dir, "customer")
+      typoNamePairs(load(s, dir, "customer")
         .select(col("c_name").as("name")).distinct())
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
@@ -192,7 +192,7 @@ object MiningOps {
   val queries: Seq[GraftQuery] = Seq(
     GraftQuery("q_typo_pair_stats",
       "bounded-output typo-pair census: per name-length, distinct edit-1 name pairs + the id-pair count they expand to",
-      (s, dir) => typoPairStats(t(s, dir, "customer"), "c_name",
+      (s, dir) => typoPairStats(load(s, dir, "customer"), "c_name",
         sharedNamePairs = Some(typoNamePairsShared(s, dir))),
       // Oracle = the same deletion-neighborhood CANDIDATE set the SQL
       // below derives for q_typo_pairs (exact recall by the SymSpell
@@ -222,7 +222,7 @@ object MiningOps {
           |FROM wp GROUP BY 1 ORDER BY 1""".stripMargin)),
     GraftQuery("q_typo_pairs",
       "edit-distance-1 entity pairs via SymSpell deletion-neighborhood blocking (exact recall, levenshtein verify)",
-      (s, dir) => typoPairs(t(s, dir, "customer"), "c_custkey", "c_name",
+      (s, dir) => typoPairs(load(s, dir, "customer"), "c_custkey", "c_name",
         sharedNamePairs = Some(typoNamePairsShared(s, dir))),
       // Deletion-neighborhood mirror of the r1–r8 brute-force id cross
       // join (EXCEPT-ALL-equal at both gate SFs): candidates = name
@@ -250,7 +250,7 @@ object MiningOps {
           |ORDER BY ida, idb""".stripMargin)),
     GraftQuery("q_itemset_pairs",
       "market-basket pair mining: top-20 co-purchased part pairs with support, confidence, lift",
-      (s, dir) => itemsetPairs(t(s, dir, "lineitem"), k = 20),
+      (s, dir) => itemsetPairs(load(s, dir, "lineitem"), k = 20),
       Some(
         """WITH items AS (
           |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
@@ -280,9 +280,9 @@ object MiningOps {
       // the corpus; an uncapped supplier side grows with sf and would
       // make the key quadratic at the decade gates
       (s, dir) => fuzzyBestMatch(
-        t(s, dir, "supplier").where(org.apache.spark.sql.functions.col("s_suppkey") <= 100),
+        load(s, dir, "supplier").where(org.apache.spark.sql.functions.col("s_suppkey") <= 100),
         "s_suppkey", "s_name",
-        t(s, dir, "customer"), "c_custkey", "c_name"),
+        load(s, dir, "customer"), "c_custkey", "c_name"),
       Some(
         """WITH sc AS (
           |  SELECT s.s_suppkey, c.c_custkey,

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.GraftQuery
-import graft.engine.Tables.t
+import graft.engine.Tables.load
 
 /** Typed asset row for the [[Multimodal.typedDecode]] partition-decode
   * path (Dataset[T] with a case-class Encoder).
@@ -190,7 +190,7 @@ object Multimodal {
   // ---- registered queries ----------------------------------------------
 
   def metaQuery(s: SparkSession, dir: String): DataFrame =
-    assets(t(s, dir, "documents"))
+    assets(load(s, dir, "documents"))
       .select(
         col("asset_id"),
         col("meta.kind").as("kind"),
@@ -207,7 +207,7 @@ object Multimodal {
     * xxhash/CRC variants remain for the expression and typed paths.
     */
   def featuresQuery(s: SparkSession, dir: String): DataFrame =
-    assets(t(s, dir, "documents"))
+    assets(load(s, dir, "documents"))
       .select(
         col("asset_id"), col("meta.kind").as("kind"),
         expr(
@@ -217,7 +217,7 @@ object Multimodal {
       .orderBy("asset_id")
 
   def resizeQuery(s: SparkSession, dir: String): DataFrame =
-    resizeAssets(assets(t(s, dir, "documents")), factor = 4)
+    resizeAssets(assets(load(s, dir, "documents")), factor = 4)
       .select(
         col("asset_id"),
         octet_length(col("payload")).as("orig_bytes"),
@@ -225,12 +225,12 @@ object Multimodal {
       .orderBy("asset_id")
 
   def framesQuery(s: SparkSession, dir: String): DataFrame =
-    sampleFrames(assets(t(s, dir, "documents")), frameBytes = 64, stride = 2)
+    sampleFrames(assets(load(s, dir, "documents")), frameBytes = 64, stride = 2)
       .select(col("asset_id"), col("frame_idx"), octet_length(col("frame")).as("frame_bytes"))
       .orderBy("asset_id", "frame_idx")
 
   def audioQuery(s: SparkSession, dir: String): DataFrame =
-    audioFeatures(assets(t(s, dir, "documents")))
+    audioFeatures(assets(load(s, dir, "documents")))
       .orderBy("asset_id", "window_idx")
 
   /** 64-bit perceptual hash of a binary payload: SimHash over the
@@ -261,7 +261,7 @@ object Multimodal {
     */
   def phashPairs(s: SparkSession, dir: String): DataFrame =
     Dedup.hammingBlockedPairs(
-      withPhash(assets(t(s, dir, "documents"))),
+      withPhash(assets(load(s, dir, "documents"))),
       "asset_id", "phash", totalBits = 64, maxHamming = 3,
       // the (id, hash) relation feeds the census and both pair sides;
       // persisting it (~16 bytes/asset) avoids recomputing the per-byte
@@ -303,7 +303,7 @@ object Multimodal {
     */
   def phashMd5Twin(s: SparkSession, dir: String): DataFrame =
     Dedup.hammingBlockedPairs(
-      md5Phash32(assets(t(s, dir, "documents"))),
+      md5Phash32(assets(load(s, dir, "documents"))),
       "asset_id", "simhash32", totalBits = 32, maxHamming = 3,
       // cacheHashed for the same reason as [[phashPairs]]: the (id,
       // hash) relation (~16 bytes/asset) feeds the census and both
@@ -437,7 +437,7 @@ object Multimodal {
     * each payload.
     */
   def cdcChunkQuery(s: SparkSession, dir: String): DataFrame =
-    cdcChunks(t(s, dir, "documents"))
+    cdcChunks(load(s, dir, "documents"))
       .orderBy("asset_id", "chunk_idx")
 
   /** Corpus-level chunk-dedup census — [[payloadDedupStats]] at CDC
@@ -506,7 +506,7 @@ object Multimodal {
     * Row-local codegen; one scan, no shuffle.
     */
   def imageDimsQuery(s: SparkSession, dir: String): DataFrame =
-    plantedImageAssets(t(s, dir, "documents"))
+    plantedImageAssets(load(s, dir, "documents"))
       .select(col("asset_id"), expr("graft_image_dims(payload)").as("dims"))
       .select(col("asset_id"),
         when(col("dims") >= 0, shiftright(col("dims"), 32).cast("int"))
@@ -601,7 +601,7 @@ object Multimodal {
         "\nORDER BY asset_id, chunk_idx")),
     GraftQuery("q_chunk_dup_docs",
       "per-doc duplicated-CDC-chunk byte fraction (first occurrence = min asset_id owns a digest) — the TrainingPipeline chunk-dedup stage's scoring core",
-      (s, dir) => chunkDupStats(t(s, dir, "documents")).orderBy("doc_id"),
+      (s, dir) => chunkDupStats(load(s, dir, "documents")).orderBy("doc_id"),
       Some(cdcChunkSql + """,
         |own AS (SELECT digest, min(asset_id) AS owner FROM ch GROUP BY 1),
         |pd AS (
@@ -615,7 +615,7 @@ object Multimodal {
         |FROM pd ORDER BY doc_id""".stripMargin)),
     GraftQuery("q_chunk_dedup",
       "chunk-grain dedup census over content-defined chunks: copies, unique bytes, savings",
-      (s, dir) => cdcDedupStats(t(s, dir, "documents")),
+      (s, dir) => cdcDedupStats(load(s, dir, "documents")),
       Some(cdcChunkSql + """,
         |g AS (SELECT digest, count(*) AS copies, max(c_len) AS cl
         |      FROM ch GROUP BY 1)
@@ -640,7 +640,7 @@ object Multimodal {
           |FROM documents ORDER BY asset_id""".stripMargin)),
     GraftQuery("q_media_sniff",
       "magic-byte media-type sniff vs declared kind: the metadata-lies ingest audit (injected deterministic magics)",
-      (s, dir) => sniffReport(t(s, dir, "documents")),
+      (s, dir) => sniffReport(load(s, dir, "documents")),
       Some(
         """WITH inj AS (
           |  SELECT doc_id,
@@ -670,7 +670,7 @@ object Multimodal {
           |FROM sn GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
     GraftQuery("q_payload_dedup",
       "content-addressable dedup report: md5 payload digests, copy counts, exact bytes-saved accounting",
-      (s, dir) => payloadDedupStats(t(s, dir, "documents")),
+      (s, dir) => payloadDedupStats(load(s, dir, "documents")),
       Some(
         """WITH a AS (
           |  SELECT md5(coalesce(text, '')) AS digest,

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 import graft.GraftQuery
-import graft.engine.Tables.t
+import graft.engine.Tables.load
 
 /** Revenue / customer-base analytics: RFM segmentation, month-over-
   * month growth, cohort lifetime value, inter-order gap distribution,
@@ -48,7 +48,7 @@ object RevenueOps {
     * by where the cuts come from.
     */
   def rfm(s: SparkSession, dir: String): DataFrame = {
-    val orders = t(s, dir, "orders")
+    val orders = load(s, dir, "orders")
     val per = orders.groupBy("o_custkey").agg(
       max(to_date(col("o_orderdate"))).as("last_day"),
       count(lit(1)).as("frequency"),
@@ -84,8 +84,8 @@ object RevenueOps {
     * division of exact cents (null for each nation's first month).
     */
   def momGrowth(s: SparkSession, dir: String): DataFrame = {
-    val monthly = t(s, dir, "orders")
-      .join(t(s, dir, "customer"),
+    val monthly = load(s, dir, "orders")
+      .join(load(s, dir, "customer"),
         col("o_custkey") === col("c_custkey"))
       .select(col("c_nationkey").as("nationkey"),
         trunc(to_date(col("o_orderdate")), "month").as("month"),
@@ -107,8 +107,8 @@ object RevenueOps {
     * Left join keeps cells with no prior-year baseline (growth null).
     */
   def yoyGrowth(s: SparkSession, dir: String): DataFrame = {
-    val monthly = t(s, dir, "orders")
-      .join(t(s, dir, "customer"),
+    val monthly = load(s, dir, "orders")
+      .join(load(s, dir, "customer"),
         col("o_custkey") === col("c_custkey"))
       .select(col("c_nationkey").as("nationkey"),
         trunc(to_date(col("o_orderdate")), "month").as("month"),
@@ -134,7 +134,7 @@ object RevenueOps {
     * cohort over the bounded age domain.
     */
   def cohortLtv(s: SparkSession, dir: String): DataFrame = {
-    val orders = t(s, dir, "orders")
+    val orders = load(s, dir, "orders")
       .select(col("o_custkey"),
         trunc(to_date(col("o_orderdate")), "month").as("month"),
         cents(col("o_totalprice")).as("c"))
@@ -168,7 +168,7 @@ object RevenueOps {
   def interarrival(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy("o_custkey")
       .orderBy(col("day"), col("o_orderkey"))
-    val gaps = t(s, dir, "orders")
+    val gaps = load(s, dir, "orders")
       .select(col("o_custkey"), col("o_orderkey"),
         to_date(col("o_orderdate")).as("day"))
       .withColumn("prev", lag(col("day"), 1).over(w))
@@ -193,7 +193,7 @@ object RevenueOps {
     * sums and single IEEE divisions.
     */
   def paretoShare(s: SparkSession, dir: String): DataFrame = {
-    val per = t(s, dir, "orders").groupBy("o_custkey")
+    val per = load(s, dir, "orders").groupBy("o_custkey")
       .agg(sum(cents(col("o_totalprice"))).as("m"))
     val cut = per.agg(pct("m", 0.8).as("p80"))
     per.crossJoin(broadcast(cut))
@@ -218,7 +218,7 @@ object RevenueOps {
     * engines (strict > against each cut).
     */
   def decileReport(s: SparkSession, dir: String): DataFrame = {
-    val per = t(s, dir, "orders").groupBy("o_custkey")
+    val per = load(s, dir, "orders").groupBy("o_custkey")
       .agg(sum(cents(col("o_totalprice"))).as("m"))
     val cutCols = (1 to 9).map(i => pct("m", i / 10.0).as(s"d$i"))
     val cuts = per.agg(cutCols.head, cutCols.tail: _*)
@@ -250,7 +250,7 @@ object RevenueOps {
     */
   def wilsonCi(s: SparkSession, dir: String): DataFrame = {
     val z = lit(1.96)
-    val agg = t(s, dir, "events")
+    val agg = load(s, dir, "events")
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"),
         sum((col("value") > 250).cast("long")).as("successes"))
@@ -285,7 +285,7 @@ object RevenueOps {
     * same bridge the percentile cuts use).
     */
   def cramersV(s: SparkSession, dir: String): DataFrame = {
-    val cells = t(s, dir, "customer")
+    val cells = load(s, dir, "customer")
       .groupBy(col("c_nationkey").as("r"), col("c_mktsegment").as("cc"))
       .agg(count(lit(1)).as("o"))
     val rows = cells.groupBy("r").agg(sum("o").as("rtot"))
@@ -343,7 +343,7 @@ object RevenueOps {
     */
   def psiDrift(s: SparkSession, dir: String, buckets: Int = 10): DataFrame = {
     val split = lit("1998-01-01").cast("timestamp")
-    val base = t(s, dir, "orders")
+    val base = load(s, dir, "orders")
       .select((col("o_orderdate") < split).as("era_a"),
         floor(col("o_totalprice") * 100 + 0.5).cast("long").as("cents"))
     val rng = base.agg(min("cents").as("lo"), max("cents").as("hi"))

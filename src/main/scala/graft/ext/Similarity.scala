@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.GraftQuery
 import graft.engine.Shared
-import graft.engine.Tables.t
+import graft.engine.Tables.load
 
 /** Similarity search over an embedding column (`array<float>`),
   * north-star Tier B.
@@ -246,7 +246,7 @@ object Similarity {
   private[graft] def sharedKmeansCentroids(s: SparkSession, dir: String,
       k: Int, iters: Int): Array[(Int, Seq[Double])] =
     Shared(s"ivf.centroids/$k/$iters", s, dir) {
-      kmeansCentroids(t(s, dir, "embeddings"), k, iters)
+      kmeansCentroids(load(s, dir, "embeddings"), k, iters)
     }
 
   /** IVF list assignment: each vector goes to its nearest centroid (by
@@ -558,7 +558,7 @@ object Similarity {
   // ---- registered queries ----------------------------------------------
 
   def cosineTopkQuery(s: SparkSession, dir: String): DataFrame =
-    bruteForceTopK(t(s, dir, "embeddings"), queryVecId = 0L, k = 20)
+    bruteForceTopK(load(s, dir, "embeddings"), queryVecId = 0L, k = 20)
 
   /** Probe radius 3: measured recall@10 = 1.0 at sf0.001/0.01/0.1
     * (radius 2 → 0.4–0.9 — this fixture's neighbors are near-orthogonal,
@@ -566,7 +566,7 @@ object Similarity {
     * count (p≈22) radius 3 still probes ~1.8k of 4M buckets.
     */
   def lshTopkQuery(s: SparkSession, dir: String): DataFrame =
-    lshTopK(t(s, dir, "embeddings"), queryVecId = 0L, k = 10, probeRadius = 3)
+    lshTopK(load(s, dir, "embeddings"), queryVecId = 0L, k = 10, probeRadius = 3)
 
   /** nProbe 8 of 16 lists: the measured minimum for recall@10 = 1.0 with
     * k-means centroids across ALL fixture SFs (nProbe 6 → 0.9 at
@@ -576,7 +576,7 @@ object Similarity {
     * cluster far tighter and probe fewer lists.
     */
   def ivfTopkQuery(s: SparkSession, dir: String): DataFrame =
-    ivfTopK(t(s, dir, "embeddings"), queryVecId = 0L, k = 10, nProbe = 8,
+    ivfTopK(load(s, dir, "embeddings"), queryVecId = 0L, k = 10, nProbe = 8,
       sharedCentroids = Some(sharedKmeansCentroids(s, dir, 16, 3)))
 
   /** Threshold 0.3: the synthetic embeddings are near-orthogonal random
@@ -585,7 +585,7 @@ object Similarity {
     * the same blocked pipeline with a non-empty result.
     */
   def nearDupQuery(s: SparkSession, dir: String): DataFrame =
-    nearDupPairs(t(s, dir, "embeddings"), threshold = 0.3,
+    nearDupPairs(load(s, dir, "embeddings"), threshold = 0.3,
       cacheBuckets = false)
 
   /** SemDeDup-style semantic deduplication (Abbas et al. 2023,
@@ -690,7 +690,7 @@ object Similarity {
   }
 
   def semanticDedupQuery(s: SparkSession, dir: String): DataFrame =
-    semanticDedup(t(s, dir, "embeddings"), tau = 0.2)
+    semanticDedup(load(s, dir, "embeddings"), tau = 0.2)
 
   /** SemDeDup composed with its REAL clustering stage (Abbas et al.
     * 2023 §2: k-means the embeddings, then dedup within clusters):
@@ -737,7 +737,7 @@ object Similarity {
     * oracle's O(n²) scan stays bounded at every SF.
     */
   def plantedNearDupTwin(s: SparkSession, dir: String): DataFrame = {
-    val base = t(s, dir, "embeddings").where(col("vec_id") < 500)
+    val base = load(s, dir, "embeddings").where(col("vec_id") < 500)
       .select(col("vec_id"), col("embedding"))
     val planted = base.select(
       (col("vec_id") + 10000).as("vec_id"),
@@ -751,7 +751,7 @@ object Similarity {
     * columns defeat the driver's canonicalization.
     */
   def arrayFuncsQuery(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "embeddings")
+    load(s, dir, "embeddings")
       .select(
         col("vec_id"),
         size(col("embedding")).as("dim"),
@@ -789,7 +789,7 @@ object Similarity {
     * exact double scale.
     */
   def quantizeEmbedQuery(s: SparkSession, dir: String): DataFrame =
-    quantize(t(s, dir, "embeddings"))
+    quantize(load(s, dir, "embeddings"))
       .select(
         col("vec_id"), col("scale"),
         expr("CAST(array_min(qvec) AS INT)").as("q_min"),
@@ -813,7 +813,7 @@ object Similarity {
     * 100 TB would drop the determinism tax and sum directly.
     */
   def labelCentroids(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "embeddings")
+    load(s, dir, "embeddings")
       .select(col("vec_id"), col("label"),
         posexplode(col("embedding")).as(Seq("pos", "v")))
       .groupBy("label", "pos")
@@ -889,7 +889,7 @@ object Similarity {
   // first-runner attribution caveat as TimeSeries.sharedDailyRevenue.
   private[graft] def sharedEmbedGram(s: SparkSession, dir: String): DataFrame =
     Shared("embed.gram", s, dir) {
-      embedGramCore(t(s, dir, "embeddings")).localCheckpoint()
+      embedGramCore(load(s, dir, "embeddings")).localCheckpoint()
     }
 
   /** Driver-side power iteration over a [[embedGram]]-shaped d×d matrix
@@ -1058,7 +1058,7 @@ object Similarity {
   val queries: Seq[GraftQuery] = Seq(
     GraftQuery("q_norm_report",
       "per-label embedding L2-norm mean/std (encoder-drift QC, micro-quantized exact moments)",
-      (s, dir) => normReport(t(s, dir, "embeddings")),
+      (s, dir) => normReport(load(s, dir, "embeddings")),
       Some(
         """WITH u AS (
           |  SELECT label,
@@ -1076,7 +1076,7 @@ object Similarity {
           |FROM m ORDER BY label""".stripMargin)),
     GraftQuery("q_class_balance",
       "label-balance report: Herfindahl concentration + effective class count (log-free exact diversity)",
-      (s, dir) => classBalance(t(s, dir, "embeddings")),
+      (s, dir) => classBalance(load(s, dir, "embeddings")),
       Some(
         """WITH c AS (SELECT label, count(*) AS c FROM embeddings GROUP BY 1),
           |a AS (SELECT CAST(sum(c) AS BIGINT) AS n, count(*) AS n_classes,
@@ -1090,7 +1090,7 @@ object Similarity {
           |FROM a ORDER BY n""".stripMargin)),
     GraftQuery("q_cosine_profile",
       "embedding-space health: pairwise-cosine histogram over the deterministic n/2-offset pairing (collapse diagnostic)",
-      (s, dir) => cosineProfile(t(s, dir, "embeddings")),
+      (s, dir) => cosineProfile(load(s, dir, "embeddings")),
       Some(
         """WITH off AS (SELECT CAST(count(*) // 2 AS BIGINT) AS off FROM embeddings),
           |l AS (SELECT vec_id + off AS pair_id, embedding AS v1 FROM embeddings, off),
@@ -1109,7 +1109,7 @@ object Similarity {
           |FROM cc, tot, off GROUP BY 1 ORDER BY bucket""".stripMargin)),
     GraftQuery("q_pca_project",
       "distributed PCA: Gram-matrix reduce + driver power iteration + broadcast dominant-component projection",
-      (s, dir) => pcaProject(t(s, dir, "embeddings"),
+      (s, dir) => pcaProject(load(s, dir, "embeddings"),
         sharedGram = Some(sharedEmbedGram(s, dir))),
       None),
     GraftQuery("q_embed_gram",
@@ -1142,7 +1142,7 @@ object Similarity {
           |SELECT vec_id, label, cos_sim FROM sims ORDER BY cos_sim DESC, vec_id LIMIT 20""".stripMargin)),
     GraftQuery("q_hard_negatives",
       "contrastive hard-negative mining: per stride-sampled anchor, the most-similar vector with a different label (broadcast anchors, map-side argmax)",
-      (s, dir) => hardNegatives(t(s, dir, "embeddings"), stride = 41L),
+      (s, dir) => hardNegatives(load(s, dir, "embeddings"), stride = 41L),
       Some(
         """WITH a AS (
           |  SELECT vec_id AS a_id, label AS a_label, embedding AS a_vec
@@ -1178,11 +1178,11 @@ object Similarity {
       Some(annOracleSql(k = 10))),
     GraftQuery("q_ann_pq_topk",
       "product-quantization ADC top-k (8x32 L2 codebooks, 32x compression) + exact re-rank (oracle = exact top-k)",
-      (s, dir) => pqTopK(t(s, dir, "embeddings"), queryVecId = 0L, k = 10),
+      (s, dir) => pqTopK(load(s, dir, "embeddings"), queryVecId = 0L, k = 10),
       Some(annOracleSql(k = 10))),
     GraftQuery("q_ann_ivfpq_topk",
       "IVF-PQ composed ANN (IVFADC layout): nProbe-pruned lists + 8-byte ADC scan + exact re-rank (oracle = exact top-k)",
-      (s, dir) => ivfPqTopK(t(s, dir, "embeddings"), queryVecId = 0L, k = 10,
+      (s, dir) => ivfPqTopK(load(s, dir, "embeddings"), queryVecId = 0L, k = 10,
         sharedCentroids = Some(sharedKmeansCentroids(s, dir, 16, 3))),
       Some(annOracleSql(k = 10))),
     GraftQuery("q_embed_neardup", "embedding-cosine near-dup pairs, SRP-blocked + multiprobe (0.3 on near-orthogonal data -> rows-only; blocking proven by q_embed_planted_twin)",

@@ -7,7 +7,7 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 import graft.GraftQuery
 import graft.engine.Shared
-import graft.engine.Tables.t
+import graft.engine.Tables.load
 
 /** Time-series analytics over the daily order-revenue series plus
   * event-level survival analysis — the monitoring/forecast-prep family
@@ -63,7 +63,7 @@ object TimeSeries {
   // the day grain.
   private[graft] def sharedDailyRevenue(s: SparkSession, dir: String): DataFrame =
     Shared("ts.daily", s, dir) {
-      dailyRevenue(t(s, dir, "orders"))
+      dailyRevenue(load(s, dir, "orders"))
         .repartition(s.sparkContext.defaultParallelism)
         .localCheckpoint()
     }
@@ -80,7 +80,7 @@ object TimeSeries {
   // attribution caveats as [[sharedDailyRevenue]].
   private[graft] def sharedStlResidual(s: SparkSession, dir: String): DataFrame =
     Shared("ts.stl", s, dir) {
-      stlCore(t(s, dir, "orders"), Some(sharedDailyRevenue(s, dir)))
+      stlCore(load(s, dir, "orders"), Some(sharedDailyRevenue(s, dir)))
         .localCheckpoint()
     }
 
@@ -590,7 +590,7 @@ object TimeSeries {
   val queries: Seq[GraftQuery] = Seq(
     GraftQuery("q_theil_sen",
       "Theil-Sen robust daily-revenue trend: median pairwise slope + median-residual intercept (DECIMAL bridge)",
-      (s, dir) => theilSen(t(s, dir, "orders"),
+      (s, dir) => theilSen(load(s, dir, "orders"),
         sharedDaily = Some(sharedDailyRevenue(s, dir))),
       Some(
         s"""WITH daily AS ($dailySql),
@@ -613,7 +613,7 @@ object TimeSeries {
            |FROM m, i ORDER BY n_pairs""".stripMargin)),
     GraftQuery("q_siegel_trend",
       "Siegel repeated-median trend: per-point slope medians then median-of-medians — the bounded-buffer scale path for q_theil_sen",
-      (s, dir) => siegelTrend(t(s, dir, "orders"),
+      (s, dir) => siegelTrend(load(s, dir, "orders"),
         sharedDaily = Some(sharedDailyRevenue(s, dir))),
       Some(
         s"""WITH daily AS ($dailySql),
@@ -639,7 +639,7 @@ object TimeSeries {
            |FROM m, i ORDER BY n_points""".stripMargin)),
     GraftQuery("q_seasonality",
       "day-of-week seasonal index of daily revenue (exact cents sums, one IEEE division per mean)",
-      (s, dir) => seasonality(t(s, dir, "orders"),
+      (s, dir) => seasonality(load(s, dir, "orders"),
         sharedDaily = Some(sharedDailyRevenue(s, dir))),
       Some(
         s"""WITH daily AS ($dailySql),
@@ -654,7 +654,7 @@ object TimeSeries {
            |FROM d, tot ORDER BY dow""".stripMargin)),
     GraftQuery("q_acf",
       "autocorrelation of daily revenue at lags 1..7 (n-scaled integer deviations, DECIMAL(38,0) moment sums)",
-      (s, dir) => acf(t(s, dir, "orders"),
+      (s, dir) => acf(load(s, dir, "orders"),
         sharedDaily = Some(sharedDailyRevenue(s, dir))),
       Some(
         s"""WITH daily AS ($dailySql),
@@ -674,7 +674,7 @@ object TimeSeries {
            |FROM nums, den ORDER BY lag""".stripMargin)),
     GraftQuery("q_ljung_box",
       "Ljung-Box white-noise portmanteau test at h=7 over daily revenue (ordered term fold, chi2 flag)",
-      (s, dir) => ljungBox(t(s, dir, "orders"),
+      (s, dir) => ljungBox(load(s, dir, "orders"),
         sharedDaily = Some(sharedDailyRevenue(s, dir))),
       Some(
         s"""WITH daily AS ($dailySql),
@@ -708,7 +708,7 @@ object TimeSeries {
            |FROM c WHERE rn = 1 ORDER BY n_days""".stripMargin)),
     GraftQuery("q_cusum",
       "one-sided CUSUM change-point stat over daily revenue (closed-form cum - running-min, self-fit slack = sigma/2)",
-      (s, dir) => cusum(t(s, dir, "orders"),
+      (s, dir) => cusum(load(s, dir, "orders"),
         sharedDaily = Some(sharedDailyRevenue(s, dir))),
       Some(
         s"""WITH daily AS ($dailySql),
@@ -730,12 +730,12 @@ object TimeSeries {
            |FROM r ORDER BY day""".stripMargin)),
     GraftQuery("q_stl_decompose",
       "classical additive trend/seasonal/residual decomposition of daily revenue (lcm-scaled exact integers)",
-      (s, dir) => stlDecompose(t(s, dir, "orders"),
+      (s, dir) => stlDecompose(load(s, dir, "orders"),
         sharedStl = Some(sharedStlResidual(s, dir))),
       Some(stlOracleCore + " ORDER BY day")),
     GraftQuery("q_seasonal_anomalies",
       "seasonality-aware daily anomaly flags: STL residual z-scores from exact micro-unit moments, |z| > 3",
-      (s, dir) => seasonalAnomalies(t(s, dir, "orders"),
+      (s, dir) => seasonalAnomalies(load(s, dir, "orders"),
         sharedStl = Some(sharedStlResidual(s, dir))),
       Some(
         s"""WITH stl AS (SELECT * FROM ($stlOracleCore)),
@@ -759,7 +759,7 @@ object TimeSeries {
            |FROM zz ORDER BY day""".stripMargin)),
     GraftQuery("q_survival_km",
       "Kaplan-Meier time-to-first-purchase with right censoring (life table over the bounded duration-day domain)",
-      (s, dir) => survivalKm(t(s, dir, "events")),
+      (s, dir) => survivalKm(load(s, dir, "events")),
       Some(
         """WITH pu AS (
           |  SELECT user_id, min(ts) AS entry,

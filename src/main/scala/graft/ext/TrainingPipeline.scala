@@ -125,11 +125,12 @@ object TrainingPipeline {
     * and `outDir/train` (range-partitioned shards with batch_id).
     */
   def run(docs: DataFrame, outDir: String, cfg: Config = Config()): Report = {
-    // full session contract, not just function registration: tuned()
-    // pins ANSI off / UTC / AQE AND lets JaccardRewrite + the graft_*
-    // registry apply — without it the near-dup verify join would run
-    // the unrewritten three-array Jaccard composition on the hottest
-    // path, and Spark 4's ANSI default would change cast semantics
+    // a library entry point, so the session contract is applied here:
+    // tuned() pins ANSI off / UTC / AQE AND lets JaccardRewrite + the
+    // graft_* registry apply — without it the near-dup verify join
+    // would run the unrewritten three-array Jaccard composition on the
+    // hottest path, and Spark 4's ANSI default would change cast
+    // semantics
     graft.engine.GraftSession.tuned(docs.sparkSession)
 
     // -- stage 0 (optional): URL-canonical crawl dedup ------------------

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.GraftQuery
-import graft.engine.Tables.t
+import graft.engine.Tables.load
 import graft.functions.TextOps
 
 /** Training-data preparation operators (north-star Tier B): the steps
@@ -451,24 +451,24 @@ object TrainingPrep {
   // ---- registered queries ----------------------------------------------
 
   def chunksQuery(s: SparkSession, dir: String): DataFrame =
-    chunkDocuments(t(s, dir, "documents"), "text")
+    chunkDocuments(load(s, dir, "documents"), "text")
 
   def shuffleQuery(s: SparkSession, dir: String): DataFrame =
-    deterministicShuffle(t(s, dir, "documents"))
+    deterministicShuffle(load(s, dir, "documents"))
 
   def sampleQuery(s: SparkSession, dir: String): DataFrame =
-    stratifiedSample(t(s, dir, "documents"), "lang")
+    stratifiedSample(load(s, dir, "documents"), "lang")
 
   private val normSql = TextOps.duckNormSql
 
   def histogramQuery(s: SparkSession, dir: String): DataFrame =
-    histogram(t(s, dir, "documents"))
+    histogram(load(s, dir, "documents"))
 
   def profileQuery(s: SparkSession, dir: String): DataFrame =
-    columnProfile(t(s, dir, "documents"))
+    columnProfile(load(s, dir, "documents"))
 
   def packQuery(s: SparkSession, dir: String): DataFrame =
-    sequencePack(t(s, dir, "documents"), budget = 4096)
+    sequencePack(load(s, dir, "documents"), budget = 4096)
 
   /** Per-source-file provenance report via the `_metadata` hidden
     * column: which file contributed which id range and how many docs.
@@ -478,7 +478,7 @@ object TrainingPrep {
     * populated by the scan itself.
     */
   def provenance(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
+    load(s, dir, "documents")
       .select(col("doc_id"), col("_metadata.file_name").as("file_name"))
       .groupBy("file_name")
       .agg(count(lit(1)).as("n_docs"),
@@ -592,7 +592,7 @@ object TrainingPrep {
   val queries: Seq[GraftQuery] = Seq(
     GraftQuery("q_dsir_sample",
       "DSIR importance resampling: top-k raw docs by hashed-bigram target/raw log-likelihood ratio (bit-quantized exact)",
-      (s, dir) => dsirSample(t(s, dir, "documents"), "text", "source", "src1"),
+      (s, dir) => dsirSample(load(s, dir, "documents"), "text", "source", "src1"),
       Some(
         s"""WITH toks AS (
            |  SELECT doc_id, source = 'src1' AS in_t, $normToks AS t FROM documents),
@@ -622,7 +622,7 @@ object TrainingPrep {
            |ORDER BY sum_bits DESC, doc_id LIMIT 50""".stripMargin)),
     GraftQuery("q_top_p_sample",
       "per-source top-p (nucleus) selection: keep each domain's highest-mass head to p=1/2 of its mass, exact integer cut",
-      (s, dir) => topPSample(t(s, dir, "documents")),
+      (s, dir) => topPSample(load(s, dir, "documents")),
       Some(
         """WITH v AS (
           |  SELECT source, n_chars AS val, count(*) AS cnt,
@@ -665,7 +665,7 @@ object TrainingPrep {
           |FROM tok ORDER BY doc_id""".stripMargin)),
     GraftQuery("q_sequence_pack_bpe",
       "token-budget batch packing on REAL BPE piece counts (3 learned merges) instead of the whitespace proxy",
-      (s, dir) => sequencePackBpe(t(s, dir, "documents"), budget = 4096,
+      (s, dir) => sequencePackBpe(load(s, dir, "documents"), budget = 4096,
         sharedTrain = Some(TextOps.bpeTrainShared(s, dir))),
       Some(
         s"""WITH ${TextOps.bpeOracleCtes},
@@ -720,7 +720,7 @@ object TrainingPrep {
            |WHERE list_aggregate(tk[i * 24 + 1 : i * 24 + 32], 'string_agg', ' ') <> ''
            |ORDER BY doc_id, chunk_idx""".stripMargin)),
     GraftQuery("q_hash_split", "deterministic 80/10/10 train/val/test assignment by md5 bucket",
-      (s, dir) => hashSplit(t(s, dir, "documents")),
+      (s, dir) => hashSplit(load(s, dir, "documents")),
       Some(
         """SELECT doc_id,
           |       CASE WHEN b < 80 THEN 'train' WHEN b < 90 THEN 'val' ELSE 'test' END AS split
@@ -730,7 +730,7 @@ object TrainingPrep {
           |ORDER BY doc_id""".stripMargin)),
     GraftQuery("q_corpus_datasheet",
       "one-row corpus datasheet (Gebru 2021): docs/tokens/chars, language spread + dominant share, exact-dup and blank-doc fractions",
-      (s, dir) => corpusDatasheet(t(s, dir, "documents")),
+      (s, dir) => corpusDatasheet(load(s, dir, "documents")),
       Some(
         """WITH b AS (
           |  SELECT coalesce(text, '') AS t, lang,
@@ -759,7 +759,7 @@ object TrainingPrep {
           |FROM m, dd, ll, tl""".stripMargin)),
     GraftQuery("q_shard_manifest",
       "dataset-release shard manifest: per-shard counts, byte mass, id range, order-invariant XOR + sum content digests over md5 fingerprints",
-      (s, dir) => shardManifest(t(s, dir, "documents")),
+      (s, dir) => shardManifest(load(s, dir, "documents")),
       Some(
         """WITH d AS (
           |  SELECT doc_id, n_chars,
@@ -776,7 +776,7 @@ object TrainingPrep {
           |       max(doc_id) AS max_doc
           |FROM d GROUP BY shard_id ORDER BY shard_id""".stripMargin)),
     GraftQuery("q_weighted_sample", "quality-weighted deterministic subsample (integer md5 threshold, map-only)",
-      (s, dir) => weightedSample(t(s, dir, "documents")),
+      (s, dir) => weightedSample(load(s, dir, "documents")),
       Some(
         """SELECT doc_id, lang, n_chars FROM (
           |  SELECT doc_id, lang, n_chars,
@@ -791,7 +791,7 @@ object TrainingPrep {
       // short tail still samples proportionally — so the saturation
       // branch of weightedKeep is oracle-gated, not just unit-tested
       "weighted subsample with a SATURATING cap (docs at/above cap always survive)",
-      (s, dir) => weightedSample(t(s, dir, "documents"), cap = 200L),
+      (s, dir) => weightedSample(load(s, dir, "documents"), cap = 200L),
       Some(
         """SELECT doc_id, lang, n_chars FROM (
           |  SELECT doc_id, lang, n_chars,
@@ -800,7 +800,7 @@ object TrainingPrep {
           |WHERE h * 200 < least(n_chars, 200) * 1000000
           |ORDER BY doc_id""".stripMargin)),
     GraftQuery("q_temperature_mix", "T=2 temperature-scaled multilingual mixture weights (sqrt counts quantized to exact micro-units)",
-      (s, dir) => temperatureMix(t(s, dir, "documents")),
+      (s, dir) => temperatureMix(load(s, dir, "documents")),
       Some(
         """WITH c AS (SELECT lang, count(*) AS n_docs FROM documents GROUP BY lang),
           |w AS (SELECT lang, n_docs,
@@ -822,7 +822,7 @@ object TrainingPrep {
       // every other src0 STRIPE and every fourth src1 stripe so the
       // predicate's cnt/minCnt arithmetic genuinely downsamples the
       // other 18 sources
-      (s, dir) => balancedMix(t(s, dir, "documents")
+      (s, dir) => balancedMix(load(s, dir, "documents")
         .where(!(col("source") === "src0" && expr("doc_id div 20") % 2 === 0) &&
                !(col("source") === "src1" && expr("doc_id div 20") % 4 === 0))),
       Some(

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.GraftQuery
-import graft.engine.Tables.t
+import graft.engine.Tables.load
 
 /** Web-crawl data-pipeline operators: URL parsing, per-domain corpus
   * statistics, HTML boilerplate stripping, anchor-text extraction, and
@@ -371,7 +371,7 @@ object WebOps {
   def queries: Seq[GraftQuery] = Seq(
     GraftQuery("q_url_canon",
       "URL canonicalization (case, www, default port, fragment, utm params, param sort, trailing slash) via higher-order array lambdas; DuckDB list lambdas mirror",
-      (s, dir) => urlCanon(t(s, dir, "documents")),
+      (s, dir) => urlCanon(load(s, dir, "documents")),
       Some(
         s"""WITH ${canonCteSql(plantedMessyUrlSql)}
            |SELECT doc_id, url,
@@ -380,7 +380,7 @@ object WebOps {
            |FROM c ORDER BY doc_id""".stripMargin)),
     GraftQuery("q_url_dedup",
       "canonical-URL keep-one crawl dedup (min doc_id per canonical key) over a planted refetch population — the TrainingPipeline stage-0 geometry, oracle-gated",
-      (s, dir) => urlDedup(t(s, dir, "documents")),
+      (s, dir) => urlDedup(load(s, dir, "documents")),
       Some(
         s"""WITH ${canonCteSql(plantedRefetchUrlSql)},
            |k AS (SELECT doc_id, url, $canonProjSql AS canon FROM c),
@@ -392,7 +392,7 @@ object WebOps {
            |ORDER BY doc_id""".stripMargin)),
     GraftQuery("q_url_parse",
       "parse_url host/path/query-param decomposition vs a DuckDB RE2 re-parse of the same planted URLs",
-      (s, dir) => urlParse(t(s, dir, "documents")),
+      (s, dir) => urlParse(load(s, dir, "documents")),
       Some(
         s"""WITH u AS (SELECT doc_id, $plantedUrlSql AS url FROM documents)
            |SELECT doc_id, url,
@@ -403,7 +403,7 @@ object WebOps {
            |FROM u ORDER BY doc_id""".stripMargin)),
     GraftQuery("q_domain_stats",
       "per-registrable-domain corpus census (docs, language spread, byte mass) grouped on the parsed host",
-      (s, dir) => domainStats(t(s, dir, "documents")),
+      (s, dir) => domainStats(load(s, dir, "documents")),
       Some(
         s"""WITH u AS (
            |  SELECT regexp_extract($plantedUrlSql, '^https?://([^/]+)', 1) AS host,
@@ -416,7 +416,7 @@ object WebOps {
            |FROM u GROUP BY host ORDER BY host""".stripMargin)),
     GraftQuery("q_html_strip",
       "HTML boilerplate removal (script/nav blocks, tag strip, whitespace collapse) + title extraction; identical RE2-safe regex chain runs in both engines",
-      (s, dir) => htmlStrip(t(s, dir, "documents")),
+      (s, dir) => htmlStrip(load(s, dir, "documents")),
       Some(
         s"""WITH h AS (SELECT doc_id, $plantedHtmlSql AS html FROM documents),
            |c AS (
@@ -436,7 +436,7 @@ object WebOps {
            |FROM c ORDER BY doc_id""".stripMargin)),
     GraftQuery("q_anchor_text",
       "anchor-text harvest: regexp_extract_all href/text pairs, parse target host, census terms per target domain; oracle reconstructs ground truth from the planted columns",
-      (s, dir) => anchorText(t(s, dir, "documents")),
+      (s, dir) => anchorText(load(s, dir, "documents")),
       Some(
         """WITH base AS (
           |  SELECT doc_id, lang,
@@ -454,7 +454,7 @@ object WebOps {
           |FROM links GROUP BY host ORDER BY host""".stripMargin)),
     GraftQuery("q_crawl_frontier",
       "polite crawl-frontier scheduling: per-host priority rank caps per-host concurrency per fetch wave; window partitions on the politeness unit",
-      (s, dir) => crawlFrontier(t(s, dir, "documents")),
+      (s, dir) => crawlFrontier(load(s, dir, "documents")),
       Some(
         s"""WITH u AS (
            |  SELECT doc_id,

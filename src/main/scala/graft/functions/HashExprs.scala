@@ -1,8 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, Literal, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -19,8 +20,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * exactly once. This is the (b) tier of the operator preference order:
   * a scalar computation Spark's builtins can't express efficiently.
   *
-  * Registered as temp functions `graft_simhash64` / `graft_minhash_sig`
-  * by [[HashExprs.register]] (idempotent, called from GraftSession).
+  * Exposed to SQL as the graft_* functions of [[HashExprs.functions]]
+  * (registered by GraftSession and by graft.GraftExtensions).
   */
 object HashImpls {
   private val seed = 42L // Spark SQL's xxhash64 default seed
@@ -1319,95 +1320,79 @@ object HashExprs {
     conv(substring(md5(c.cast("string")), 1, 15), 16, 10).cast("long")
   }
 
-  /** Idempotent session registration of the graft_* temp functions. */
+  /** Matches an INT literal argument (the window/size parameters the
+    * expressions take as constructor fields, not as child columns).
+    */
+  private object IntLit {
+    def unapply(e: Expression): Option[Int] = e match {
+      case Literal(k: Int, IntegerType) => Some(k)
+      case _ => None
+    }
+  }
+
+  /** The shape `SparkSessionExtensions.injectFunction` takes. */
+  type FunctionDescription = (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)
+
+  /** One graft_* function: its usage reads `name(args) - what`, and a
+    * call whose arguments `build` does not match fails with that usage.
+    */
+  private def fn(name: String, args: String, what: String)(
+      build: PartialFunction[Seq[Expression], Expression]): FunctionDescription =
+    (FunctionIdentifier(name),
+      new ExpressionInfo(getClass.getName.stripSuffix("$"), null, name, s"$name($args) - $what",
+        "", "", "", "", "", "", "built-in"),
+      (exprs: Seq[Expression]) => build.applyOrElse(exprs, (_: Seq[Expression]) =>
+        throw new IllegalArgumentException(
+          s"$name: wrong arguments (${exprs.size} given); usage: $name($args)")))
+
+  /** The graft_* function surface, defined once. [[register]] adds it to
+    * one session; [[graft.GraftExtensions]] injects it into every session
+    * built with `spark.sql.extensions=graft.GraftExtensions`.
+    */
+  val functions: Seq[FunctionDescription] = Seq(
+    fn("graft_simhash64", "array<string>", "64-bit SimHash") {
+      case Seq(a) => SimHash64Expr(a) },
+    fn("graft_norm_text", "string", "single-pass lower/strip/collapse/trim normalization") {
+      case Seq(c) => NormalizeTextExpr(c) },
+    fn("graft_minhash_sig", "array<string|bigint>[, k int literal]", "MinHash signature (k defaults to 16)") {
+      case Seq(arr) => MinHashSigExpr(arr, 16)
+      case Seq(arr, IntLit(k)) => MinHashSigExpr(arr, k) },
+    fn("graft_shingle_hashes", "array<string>, n int literal", "distinct n-gram shingle hashes") {
+      case Seq(a, IntLit(n)) => ShingleHashExpr(a, n) },
+    fn("graft_shingle_hashes_all", "array<string>, n int literal", "positional n-gram shingle hashes") {
+      case Seq(a, IntLit(n)) => ShingleHashExpr(a, n, dedupe = false) },
+    fn("graft_cdc_boundaries", "binary, maskMod int literal", "content-defined chunk boundary positions") {
+      case Seq(b, IntLit(m)) => CdcBoundariesExpr(b, m) },
+    fn("graft_winnow", "array<bigint>, w int literal", "winnowing fingerprint selection") {
+      case Seq(a, IntLit(w)) => WinnowExpr(a, w) },
+    fn("graft_cosine", "a, b", "cosine similarity of numeric arrays") {
+      case Seq(a, b) => CosineExpr(a, b) },
+    fn("graft_jaccard", "a, b", "exact set-Jaccard of two arrays") {
+      case Seq(a, b) => JaccardExpr(a, b) },
+    fn("graft_srp_bucket", "vec, planes", "sign-random-projection bucket id") {
+      case Seq(v, p) => SrpBucketExpr(v, p) },
+    fn("graft_luhn", "string", "Luhn checksum validation (13-19 digits, space/dash tolerated)") {
+      case Seq(c) => LuhnExpr(c) },
+    fn("graft_zorder", "x, y", "2-D Morton (Z-order) code") {
+      case Seq(x, y) => ZOrderExpr(x, y) },
+    fn("graft_downsample", "binary, k int literal", "every k-th byte (resize-kernel slot)") {
+      case Seq(b, IntLit(k)) => DownsampleExpr(b, k) },
+    fn("graft_jaro_winkler", "s1, s2", "Jaro-Winkler similarity in [0,1]") {
+      case Seq(a, b) => JaroWinklerExpr(a, b) },
+    fn("graft_phash64", "binary", "64-bit perceptual hash over byte 4-gram shingles") {
+      case Seq(b) => Phash64Expr(b) },
+    fn("graft_pq_encode", "vec, codebooks", "packed product-quantization codes") {
+      case Seq(v, cb) => PqEncodeExpr(v, cb) },
+    fn("graft_hilbert", "x, y", "order-10 2-D Hilbert curve index") {
+      case Seq(x, y) => HilbertExpr(x, y) },
+    fn("graft_image_dims", "binary", "(width<<32)|height from a JPEG SOF / PNG IHDR header, -1 if unparseable") {
+      case Seq(b) => ImageDimsExpr(b) },
+    fn("graft_edit1", "s1, s2", "true iff levenshtein distance is exactly 1") {
+      case Seq(a, b) => Edit1Expr(a, b) })
+
+  /** Idempotent session registration of [[functions]]. */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_simhash64",
-      exprs => SimHash64Expr(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_phash64",
-      exprs => Phash64Expr(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_image_dims",
-      exprs => ImageDimsExpr(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_edit1",
-      exprs => Edit1Expr(exprs.head, exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_norm_text",
-      exprs => NormalizeTextExpr(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_minhash_sig",
-      exprs => exprs match {
-        case Seq(arr, Literal(k: Int, IntegerType)) => MinHashSigExpr(arr, k)
-        case Seq(arr) => MinHashSigExpr(arr, 16)
-        case _ => throw new IllegalArgumentException(
-          "graft_minhash_sig(array<string|bigint>[, k literal int])")
-      }, "built-in")
-    reg.createOrReplaceTempFunction("graft_shingle_hashes",
-      exprs => exprs match {
-        case Seq(arr, Literal(n: Int, IntegerType)) => ShingleHashExpr(arr, n)
-        case _ => throw new IllegalArgumentException(
-          "graft_shingle_hashes(array<string>, n literal int)")
-      }, "built-in")
-    reg.createOrReplaceTempFunction("graft_shingle_hashes_all",
-      exprs => exprs match {
-        case Seq(arr, Literal(n: Int, IntegerType)) => ShingleHashExpr(arr, n, dedupe = false)
-        case _ => throw new IllegalArgumentException(
-          "graft_shingle_hashes_all(array<string>, n literal int)")
-      }, "built-in")
-    reg.createOrReplaceTempFunction("graft_cdc_boundaries",
-      exprs => exprs match {
-        case Seq(b, Literal(m: Int, IntegerType)) => CdcBoundariesExpr(b, m)
-        case _ => throw new IllegalArgumentException(
-          "graft_cdc_boundaries(binary, maskMod literal int)")
-      }, "built-in")
-    reg.createOrReplaceTempFunction("graft_winnow",
-      exprs => exprs match {
-        case Seq(arr, Literal(w: Int, IntegerType)) => WinnowExpr(arr, w)
-        case _ => throw new IllegalArgumentException(
-          "graft_winnow(array<bigint>, w literal int)")
-      }, "built-in")
-    reg.createOrReplaceTempFunction("graft_cosine",
-      exprs => exprs match {
-        case Seq(a, b) => CosineExpr(a, b)
-        case _ => throw new IllegalArgumentException("graft_cosine(a, b)")
-      }, "built-in")
-    reg.createOrReplaceTempFunction("graft_jaccard",
-      exprs => exprs match {
-        case Seq(a, b) => JaccardExpr(a, b)
-        case _ => throw new IllegalArgumentException("graft_jaccard(a, b)")
-      }, "built-in")
-    reg.createOrReplaceTempFunction("graft_srp_bucket",
-      exprs => exprs match {
-        case Seq(v, p) => SrpBucketExpr(v, p)
-        case _ => throw new IllegalArgumentException("graft_srp_bucket(vec, planes)")
-      }, "built-in")
-    reg.createOrReplaceTempFunction("graft_pq_encode",
-      exprs => exprs match {
-        case Seq(v, cb) => PqEncodeExpr(v, cb)
-        case _ => throw new IllegalArgumentException("graft_pq_encode(vec, codebooks literal)")
-      }, "built-in")
-    reg.createOrReplaceTempFunction("graft_jaro_winkler",
-      exprs => exprs match {
-        case Seq(a, b) => JaroWinklerExpr(a, b)
-        case _ => throw new IllegalArgumentException("graft_jaro_winkler(a, b)")
-      }, "built-in")
-    reg.createOrReplaceTempFunction("graft_luhn",
-      exprs => exprs match {
-        case Seq(c) => LuhnExpr(c)
-        case _ => throw new IllegalArgumentException("graft_luhn(string)")
-      }, "built-in")
-    reg.createOrReplaceTempFunction("graft_zorder",
-      exprs => exprs match {
-        case Seq(a, b) => ZOrderExpr(a, b)
-        case _ => throw new IllegalArgumentException("graft_zorder(x, y)")
-      }, "built-in")
-    reg.createOrReplaceTempFunction("graft_hilbert",
-      exprs => exprs match {
-        case Seq(a, b) => HilbertExpr(a, b)
-        case _ => throw new IllegalArgumentException("graft_hilbert(x, y)")
-      }, "built-in")
-    reg.createOrReplaceTempFunction("graft_downsample",
-      exprs => exprs match {
-        case Seq(b, Literal(k: Int, IntegerType)) => DownsampleExpr(b, k)
-        case _ => throw new IllegalArgumentException(
-          "graft_downsample(binary, k literal int)")
-      }, "built-in")
+    functions.foreach { case (id, info, build) => reg.registerFunction(id, info, build) }
   }
 }

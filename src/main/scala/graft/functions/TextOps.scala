@@ -6,7 +6,7 @@ import org.apache.spark.sql.types._
 
 import graft.GraftQuery
 import graft.engine.Shared
-import graft.engine.Tables.t
+import graft.engine.Tables.load
 
 /** Text analysis for training-data pipelines (north-star Tier B):
   * token counting (whitespace + BPE-ish regex), language-ID heuristic,
@@ -27,9 +27,10 @@ object TextOps {
     * [[graft.functions.NormalizeTextExpr]] (byte-identical to the
     * two-regex formulation [[normalizeTextRegex]] that the DuckDB
     * oracles mirror — equivalence spec-pinned; measured ~5× on the
-    * corpus scan). Requires a graft-registered session
-    * (GraftSession.tuned / GraftExtensions), like every graft_*
-    * consumer in this module.
+    * corpus scan). Like every graft_* consumer in this module, it
+    * needs a session that carries the graft_* functions: one tuned
+    * where it entered the library (GraftSession), or one built with
+    * GraftExtensions.
     */
   def normalizeText(c: Column): Column = call_function("graft_norm_text", c)
 
@@ -79,7 +80,7 @@ object TextOps {
     * substring/pad, regex extraction, position, reverse, edit distance.
     */
   def stringFuncs(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "customer")
+    load(s, dir, "customer")
       .select(
         col("c_custkey"),
         upper(col("c_name")).as("uname"),
@@ -102,7 +103,7 @@ object TextOps {
     // NULL text folds to '' (legacy size(NULL) = -1 under ansi-off would
     // diverge from the oracles' NULL); same guard as extractAll
     val txt = coalesce(col("text"), lit(""))
-    t(s, dir, "documents")
+    load(s, dir, "documents")
       .select(
         col("doc_id"),
         length(txt).as("n_chars_c"),
@@ -122,7 +123,7 @@ object TextOps {
   def sentenceStats(s: SparkSession, dir: String): DataFrame = {
     val txt = coalesce(col("text"), lit(""))
     val nSent = regexp_count(txt, lit("[.!?]+([ \\t\\n\\r\\f]|\\z)"))
-    t(s, dir, "documents")
+    load(s, dir, "documents")
       .select(
         col("doc_id"),
         nSent.as("n_sentences"),
@@ -134,7 +135,7 @@ object TextOps {
   def langId(s: SparkSession, dir: String): DataFrame = {
     val txt = coalesce(col("text"), lit(""))
     val scores = languageIdScores(txt).map { case (l, c) => c.as(s"score_$l") }
-    t(s, dir, "documents")
+    load(s, dir, "documents")
       .select(
         Seq(col("doc_id"), col("lang").as("labeled_lang")) ++ scores
           :+ predictedLanguage(txt).as("predicted_lang"): _*)
@@ -147,7 +148,7 @@ object TextOps {
     val nChars = length(txt)
     val stopHits = regexp_count(txt, lit(langMarkers.head._2))
     val punct = regexp_count(txt, lit("[^a-zA-Z0-9\\s]"))
-    t(s, dir, "documents")
+    load(s, dir, "documents")
       .select(
         col("doc_id"),
         nTokens.as("n_tokens"),
@@ -217,7 +218,7 @@ object TextOps {
   }
 
   def gopherRules(s: SparkSession, dir: String): DataFrame =
-    gopherRulesOf(t(s, dir, "documents"))
+    gopherRulesOf(load(s, dir, "documents"))
 
   /** C4 cleaning battery (Raffel et al. 2020 §2.2 — the "Colossal
     * Clean Crawled Corpus" heuristics), the third published filter set
@@ -296,7 +297,7 @@ object TextOps {
       .drop("__cw", "__cl")
 
   def c4Rules(s: SparkSession, dir: String): DataFrame =
-    c4RulesOf(withC4ProbeText(t(s, dir, "documents")))
+    c4RulesOf(withC4ProbeText(load(s, dir, "documents")))
 
   /** RefinedWeb line-wise correction battery (Penedo et al. 2023 §G /
     * Falcon) — the third published cleaning set beside [[c4RulesOf]]
@@ -417,7 +418,7 @@ object TextOps {
       .drop("__rw")
 
   def refinedwebRules(s: SparkSession, dir: String): DataFrame =
-    refinedwebRulesOf(withRefinedWebProbeText(t(s, dir, "documents")))
+    refinedwebRulesOf(withRefinedWebProbeText(load(s, dir, "documents")))
 
   /** Gopher REPETITION-removal battery (Rae et al. 2021 A1.1, table
     * A1) — the intra-document half that pairs with [[gopherRulesOf]]:
@@ -559,7 +560,7 @@ object TextOps {
   }
 
   def gopherRepetition(s: SparkSession, dir: String): DataFrame =
-    gopherRepetitionOf(t(s, dir, "documents"))
+    gopherRepetitionOf(load(s, dir, "documents"))
 
   /** Winnowing (rolling-hash) document fingerprints: positional 3-gram
     * hashes → per-window minima (w=4) → fingerprint set. Row-local via
@@ -569,7 +570,7 @@ object TextOps {
     * (identical docs share digests; overlapping docs share fingerprints).
     */
   def winnowFingerprint(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
+    load(s, dir, "documents")
       .withColumn("toks", split(normalizeText(col("text")), " "))
       .withColumn("fps", expr("graft_winnow(graft_shingle_hashes_all(toks, 3), 4)"))
       .select(
@@ -589,7 +590,7 @@ object TextOps {
     * production path stays [[winnowFingerprint]].
     */
   def winnowMd5Twin(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
+    load(s, dir, "documents")
       .where(col("doc_id") < 500)
       .withColumn("toks", split(normalizeText(col("text")), " "))
       .withColumn("hs", expr(
@@ -617,7 +618,7 @@ object TextOps {
     * row duplication.
     */
   def termStats(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
+    load(s, dir, "documents")
       .select(col("doc_id"),
         explode(split(normalizeText(col("text")), " ")).as("term"))
       .where(col("term") =!= "")
@@ -644,7 +645,7 @@ object TextOps {
     * rank-frequency Zipf fit would need.
     */
   def zipfSpectrum(s: SparkSession, dir: String): DataFrame =
-    zipfSpectrumOf(t(s, dir, "documents"))
+    zipfSpectrumOf(load(s, dir, "documents"))
 
   /** df-level core of [[zipfSpectrum]] (needs a `text` column) —
     * separable so the degenerate-corpus spec can drive it with a
@@ -693,7 +694,7 @@ object TextOps {
     * window runs over the bounded source domain.
     */
   def tokenBudget(s: SparkSession, dir: String): DataFrame = {
-    val d = t(s, dir, "documents")
+    val d = load(s, dir, "documents")
       .select(col("source"),
         size(filter(split(normalizeText(col("text")), " "),
           tk => tk =!= "")).cast("long").as("toks"))
@@ -733,7 +734,7 @@ object TextOps {
     */
   def countMinTopK(s: SparkSession, dir: String, depth: Int = 4,
       width: Long = 1024L, k: Int = 20): DataFrame = {
-    val toks = t(s, dir, "documents")
+    val toks = load(s, dir, "documents")
       .select(explode(split(normalizeText(col("text")), " ")).as("term"))
     val tf = toks.groupBy("term").agg(count(lit(1)).as("tf"))
     def posCol(term: Column, i: Column): Column =
@@ -772,7 +773,7 @@ object TextOps {
     * for the top-k.
     */
   def bpePairStats(s: SparkSession, dir: String, k: Int = 20): DataFrame =
-    t(s, dir, "documents")
+    load(s, dir, "documents")
       .select(explode(split(normalizeText(col("text")), " ")).as("tok"))
       // guard len >= 2 in BOTH engines: Spark's sequence(1, 0) is the
       // DESCENDING [1, 0], not empty like DuckDB's range(1, 0)
@@ -868,7 +869,7 @@ object TextOps {
       dir: String, iters: Int = 3): (DataFrame, DataFrame) = {
     require(iters == 3, s"bpeTrainShared is memoized for iters = 3 only, got $iters")
     Shared("bpe.train", s, dir) {
-      bpeTrainCore(t(s, dir, "documents"), iters)
+      bpeTrainCore(load(s, dir, "documents"), iters)
     }
   }
 
@@ -932,7 +933,7 @@ object TextOps {
       .orderBy("doc_id")
 
   def readability(s: SparkSession, dir: String): DataFrame =
-    readabilityOf(t(s, dir, "documents"))
+    readabilityOf(load(s, dir, "documents"))
 
   /** Shared oracle fragment: the 3-iteration BPE training chain
     * (v0..v3 vocabularies carrying the word, t1..t3 selected merges).
@@ -976,7 +977,7 @@ object TextOps {
     * artifact/dedup stores.
     */
   def encodings(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
+    load(s, dir, "documents")
       .select(
         col("doc_id"),
         hex(encode(substring(col("text"), 1, 8), "UTF-8")).as("hex8"),
@@ -995,7 +996,7 @@ object TextOps {
     // Spark's size(NULL) is -1 under legacy sizeOfNull (ANSI off)
     // while DuckDB's len(NULL) is NULL
     val txt = coalesce(col("text"), lit(""))
-    t(s, dir, "documents")
+    load(s, dir, "documents")
       .select(
         col("doc_id"),
         concat_ws(",", regexp_extract_all(txt, lit("[0-9]+"), lit(0)))
@@ -1006,7 +1007,7 @@ object TextOps {
   }
 
   def docFingerprint(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
+    load(s, dir, "documents")
       .select(
         col("doc_id"),
         fingerprint(col("text")).as("fingerprint"),
@@ -1026,7 +1027,7 @@ object TextOps {
     * tie-break on the term string.
     */
   def tfidfTopK(s: SparkSession, dir: String, k: Int = 5): DataFrame = {
-    val docs = t(s, dir, "documents")
+    val docs = load(s, dir, "documents")
     val toks = docs.select(col("doc_id"),
       explode(split(normalizeText(col("text")), " ")).as("term"))
     // tf feeds both the doc-frequency aggregate and the scoring join,
@@ -1074,7 +1075,7 @@ object TextOps {
     val k1p1 = lit(2.2)
     val oneMinusB = lit(0.25)
     val b = lit(0.75)
-    val toks = t(s, dir, "documents")
+    val toks = load(s, dir, "documents")
       .select(col("doc_id"),
         explode(split(normalizeText(col("text")), " ")).as("term"))
     val tf = toks.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
@@ -1137,7 +1138,7 @@ object TextOps {
       queryTerms: Seq[String] = Seq("spark", "join", "window"),
       listK: Int = 100, k: Int = 20): DataFrame = {
     val (k1, k1p1, oneMinusB, b) = (lit(1.2), lit(2.2), lit(0.25), lit(0.75))
-    val toks = t(s, dir, "documents")
+    val toks = load(s, dir, "documents")
       .select(col("doc_id"),
         explode(split(normalizeText(col("text")), " ")).as("term"))
     val tf = toks.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
@@ -1178,7 +1179,7 @@ object TextOps {
       .orderBy(col("score").desc, col("doc_id")).limit(listK)
       .withColumn("lex_rank", row_number().over(wLex))
       .select("doc_id", "lex_rank")
-    val emb = t(s, dir, "embeddings")
+    val emb = load(s, dir, "embeddings")
     val qv = emb.where(col("vec_id") === 0).select(col("embedding").as("qv"))
     val wSem = org.apache.spark.sql.expressions.Window
       .orderBy(col("cos").desc, col("doc_id"))
@@ -1212,7 +1213,7 @@ object TextOps {
     * left join.
     */
   def vocabOov(s: SparkSession, dir: String, v: Int = 100): DataFrame = {
-    val tf = t(s, dir, "documents")
+    val tf = load(s, dir, "documents")
       .select(col("doc_id"),
         explode(split(normalizeText(col("text")), " ")).as("term"))
       .groupBy("doc_id", "term")
@@ -1401,7 +1402,7 @@ object TextOps {
   val queries: Seq[GraftQuery] = Seq(
     GraftQuery("q_pmi_cooc",
       "windowed PMI co-occurrence (+-2 tokens, row-local pair fan-out, bit-quantized exact-integer PMI), top 40 pairs",
-      (s, dir) => pmiCooc(t(s, dir, "documents")),
+      (s, dir) => pmiCooc(load(s, dir, "documents")),
       Some(
         s"""WITH d AS (SELECT doc_id, $duckNormToksSql AS toks FROM documents),
            |tok AS (
@@ -1423,7 +1424,7 @@ object TextOps {
            |ORDER BY c_ab DESC, w1, w2 LIMIT 40""".stripMargin)),
     GraftQuery("q_char_entropy",
       "row-local char-level Shannon entropy, bit-quantized (exact BIGINT; compressibility quality signal)",
-      (s, dir) => charEntropy(t(s, dir, "documents")),
+      (s, dir) => charEntropy(load(s, dir, "documents")),
       Some(
         s"""WITH p AS (SELECT doc_id, $duckNormSql AS s FROM documents),
            |f AS (SELECT doc_id, s, CAST(length(s) AS INT) AS n FROM p WHERE length(s) > 0),
@@ -1438,7 +1439,7 @@ object TextOps {
            |FROM e ORDER BY doc_id""".stripMargin)),
     GraftQuery("q_chi2_terms",
       "chi-square term-label feature selection: exact 2x2 doc-level contingency per term, top-30",
-      (s, dir) => chi2Terms(t(s, dir, "documents")),
+      (s, dir) => chi2Terms(load(s, dir, "documents")),
       Some(
         s"""WITH td AS (
            |  SELECT DISTINCT term, doc_id, CAST(lang = 'en' AS BIGINT) AS y
@@ -1463,7 +1464,7 @@ object TextOps {
            |ORDER BY chi2 DESC, term LIMIT 30""".stripMargin)),
     GraftQuery("q_inverted_index",
       "inverted-index build: per-term df, total tf, bounded 8-doc postings head (WindowGroupLimit cut)",
-      (s, dir) => invertedIndex(t(s, dir, "documents")),
+      (s, dir) => invertedIndex(load(s, dir, "documents")),
       Some(
         s"""WITH td AS (
            |  SELECT term, doc_id, count(*) AS tf
@@ -1614,7 +1615,7 @@ object TextOps {
            |GROUP BY pair ORDER BY cnt DESC, pair ASC LIMIT 20""".stripMargin)),
     GraftQuery("q_bpe_merges",
       "BPE merge training: 3 unrolled greedy iterations over the weighted vocabulary (learned merge table)",
-      (s, dir) => bpeMergeTrain(t(s, dir, "documents"), iters = 3,
+      (s, dir) => bpeMergeTrain(load(s, dir, "documents"), iters = 3,
         sharedTrain = Some(bpeTrainShared(s, dir))),
       Some(
         s"""WITH $bpeOracleCtes
@@ -1623,7 +1624,7 @@ object TextOps {
            |ORDER BY step""".stripMargin)),
     GraftQuery("q_bpe_encode",
       "tokenizer apply: per-doc BPE fertility stats (words, pieces, pieces/word) under the 3 learned merges",
-      (s, dir) => bpeEncodeStats(t(s, dir, "documents"), iters = 3,
+      (s, dir) => bpeEncodeStats(load(s, dir, "documents"), iters = 3,
         sharedTrain = Some(bpeTrainShared(s, dir))),
       Some(
         s"""WITH $bpeOracleCtes,

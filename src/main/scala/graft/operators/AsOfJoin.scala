@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.GraftQuery
-import graft.engine.Tables.t
+import graft.engine.Tables.load
 
 /** As-of join — for each left row, the single right row with the
   * greatest right.ts ≤ left.ts within the same key. Spark has no
@@ -104,7 +104,7 @@ object AsOfJoin {
     * (max event_id) so the as-of choice is total on both engines.
     */
   def asofQuery(s: SparkSession, dir: String): DataFrame = {
-    val ev = t(s, dir, "events")
+    val ev = load(s, dir, "events")
     val clicks = ev.where(col("event_type") === "click")
       .select(col("user_id"), col("ts"), col("event_id").as("click_id"))
     val purchases = ev.where(col("event_type") === "purchase")
@@ -125,7 +125,7 @@ object AsOfJoin {
     * at or after the click — time-to-conversion analytics.
     */
   def asofForwardQuery(s: SparkSession, dir: String): DataFrame = {
-    val ev = t(s, dir, "events")
+    val ev = load(s, dir, "events")
     val clicks = ev.where(col("event_type") === "click")
       .select(col("user_id"), col("ts"), col("event_id").as("click_id"))
     val purchases = ev.where(col("event_type") === "purchase")

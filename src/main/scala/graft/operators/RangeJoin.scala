@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.GraftQuery
-import graft.engine.Tables.t
+import graft.engine.Tables.load
 
 /** Range (interval) join — left points joined to right intervals
   * containing them. Spark plans a raw inequality join as
@@ -45,7 +45,7 @@ object RangeJoin {
     * fan-out across overlapping windows is intended).
     */
   def rangeQuery(s: SparkSession, dir: String): DataFrame = {
-    val ev = t(s, dir, "events")
+    val ev = load(s, dir, "events")
     val clicks = ev.where(col("event_type") === "click")
       .select(col("user_id"), col("ts"), col("event_id").as("click_id"))
     val windows = ev.where(col("event_type") === "purchase")
@@ -85,7 +85,7 @@ object RangeJoin {
     * (vs q_range_join's point-in-window).
     */
   def overlapQuery(s: SparkSession, dir: String): DataFrame = {
-    val ev = t(s, dir, "events")
+    val ev = load(s, dir, "events")
     val purchases = ev.where(col("event_type") === "purchase")
       .select(col("user_id"), col("event_id").as("purchase_id"),
         col("ts").as("p_start"),

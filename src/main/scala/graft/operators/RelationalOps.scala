@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.GraftQuery
-import graft.engine.{GraftSession, Tables}
-import graft.engine.Tables.t
+import graft.engine.Tables
+import graft.engine.Tables.load
 
 /** Tier A relational operators (SURVEY.md §2.1–2.8), re-grounded on the
   * driver testdata. Shapes mirror the reference's single curated query
@@ -49,7 +49,7 @@ object RelationalOps {
 
   /** S2: bare parquet scan (transformation.py:32-36). */
   def parquetScan(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "nation").orderBy("n_nationkey")
+    load(s, dir, "nation").orderBy("n_nationkey")
 
   /** S1: all-string CSV scan of the AdventureWorks Customers fixture. */
   def csvScan(s: SparkSession, dir: String): DataFrame =
@@ -57,7 +57,7 @@ object RelationalOps {
 
   /** A1: count(*) validation query (etl_aws_vini.py:244-256). */
   def countStar(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem").agg(count(lit(1)).as("cnt"))
+    load(s, dir, "lineitem").agg(count(lit(1)).as("cnt"))
 
   /** lineitem split three ways by ship year, mirroring
     * Sales_2015/16/17 → UNION ALL (variables.py:19-24, positional).
@@ -73,7 +73,7 @@ object RelationalOps {
     * [[unionDistinct]].
     */
   private def allSales(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem")
+    val li = load(s, dir, "lineitem")
     val y = year(col("l_shipdate"))
     li.where(y <= 1996 || y === 1997 || y === 1998 || y >= 1999)
   }
@@ -89,7 +89,7 @@ object RelationalOps {
 
   /** P1/F4: projection with per-column cast + alias (variables.py:26-60). */
   def projectCast(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
+    load(s, dir, "lineitem")
       .select(
         col("l_orderkey"), col("l_linenumber"),
         col("l_quantity").cast(IntegerType).as("qty"),
@@ -105,7 +105,7 @@ object RelationalOps {
     * renderings agree when the double is integral-valued or short.
     */
   def numericCasts(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "orders")
+    load(s, dir, "orders")
       .select(
         col("o_orderkey"),
         col("o_totalprice").cast(IntegerType).as("price_int"),
@@ -120,7 +120,7 @@ object RelationalOps {
     * ansi=false to preserve them on Spark 4).
     */
   def castDecimal(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "orders")
+    load(s, dir, "orders")
       .select(
         col("o_orderkey"),
         format_string("%.2f", col("o_totalprice")).as("price_str"),
@@ -133,7 +133,7 @@ object RelationalOps {
     * unix_timestamp → from_unixtime → cast date (variables.py:27-28).
     */
   def dateParse(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "orders")
+    load(s, dir, "orders")
       .select(
         col("o_orderkey"),
         date_format(col("o_orderdate"), "M/d/yyyy").as("us_date"),
@@ -149,7 +149,7 @@ object RelationalOps {
     // Build the "$1,234.56" currency string from the DECIMAL-cast value so
     // rounding is pinned (HALF_UP) on both engines, then strip it back.
     val currency = concat(lit("$"), format_number(col("c_acctbal").cast(dec12), 2))
-    t(s, dir, "customer")
+    load(s, dir, "customer")
       .select(
         col("c_custkey"),
         currency.as("income_str"),
@@ -163,8 +163,8 @@ object RelationalOps {
     * most orders miss ⇒ NULL path exercised.
     */
   def nvlAfterJoin(s: SparkSession, dir: String): DataFrame = {
-    val o = t(s, dir, "orders")
-    val c = t(s, dir, "customer").where(col("c_mktsegment") === "BUILDING")
+    val o = load(s, dir, "orders")
+    val c = load(s, dir, "customer").where(col("c_mktsegment") === "BUILDING")
     o.join(c, o("o_custkey") === c("c_custkey"), "left_outer")
       .select(
         col("o_orderkey"),
@@ -176,7 +176,7 @@ object RelationalOps {
 
   /** P3: predicate filter; pushed to the parquet scan by Catalyst. */
   def filterPredicate(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
+    load(s, dir, "lineitem")
       .where(
         col("l_shipdate") >= lit("1998-01-01").cast(TimestampType)
           && col("l_returnflag") === "R"
@@ -189,8 +189,8 @@ object RelationalOps {
 
   /** J1: LEFT outer equi-join, single key (variables.py:62-66). */
   def leftJoin(s: SparkSession, dir: String): DataFrame = {
-    val o = t(s, dir, "orders")
-    val c = t(s, dir, "customer")
+    val o = load(s, dir, "orders")
+    val c = load(s, dir, "customer")
     o.join(c, o("o_custkey") === c("c_custkey"), "left_outer")
       .select(
         col("o_orderkey"), col("o_custkey"),
@@ -203,8 +203,8 @@ object RelationalOps {
     * not unique on its key pair).
     */
   def joinFanout(s: SparkSession, dir: String): DataFrame = {
-    val n = t(s, dir, "nation")
-    val sup = t(s, dir, "supplier")
+    val n = load(s, dir, "nation")
+    val sup = load(s, dir, "supplier")
     n.join(sup, n("n_nationkey") === sup("s_nationkey"), "left_outer")
       .select(col("n_nationkey"), col("n_name"), col("s_suppkey"), col("s_name"))
       .orderBy(col("n_nationkey"), col("s_suppkey").asc_nulls_first)
@@ -215,10 +215,10 @@ object RelationalOps {
     * f.TerritoryKey AND c.ProductKey = f.ProductKey`).
     */
   def leftJoinComposite(s: SparkSession, dir: String): DataFrame = {
-    val a = t(s, dir, "lineitem").as("a")
-    val b = t(s, dir, "orders").as("b")
-    val c = t(s, dir, "customer").as("c")
-    val f = t(s, dir, "supplier").as("f")
+    val a = load(s, dir, "lineitem").as("a")
+    val b = load(s, dir, "orders").as("b")
+    val c = load(s, dir, "customer").as("c")
+    val f = load(s, dir, "supplier").as("f")
     a.join(b, col("a.l_orderkey") === col("b.o_orderkey"), "left_outer")
       .join(c, col("b.o_custkey") === col("c.c_custkey"), "left_outer")
       .join(f,
@@ -239,8 +239,8 @@ object RelationalOps {
     * (EXISTS semantics: no fan-out, left columns only).
     */
   def semiJoin(s: SparkSession, dir: String): DataFrame = {
-    val c = t(s, dir, "customer")
-    val o = t(s, dir, "orders").where(col("o_orderstatus") === "O")
+    val c = load(s, dir, "customer")
+    val o = load(s, dir, "orders").where(col("o_orderstatus") === "O")
     c.join(o, c("c_custkey") === o("o_custkey"), "left_semi")
       .select(col("c_custkey"), col("c_name"), col("c_mktsegment"))
       .orderBy("c_custkey")
@@ -248,8 +248,8 @@ object RelationalOps {
 
   /** J+: LEFT ANTI join — customers with no order at all (NOT EXISTS). */
   def antiJoin(s: SparkSession, dir: String): DataFrame = {
-    val c = t(s, dir, "customer")
-    val o = t(s, dir, "orders")
+    val c = load(s, dir, "customer")
+    val o = load(s, dir, "orders")
     c.join(o, c("c_custkey") === o("o_custkey"), "left_anti")
       .select(col("c_custkey"), col("c_name"))
       .orderBy("c_custkey")
@@ -264,9 +264,9 @@ object RelationalOps {
     * sides, no extra pass.
     */
   def fullOuterJoin(s: SparkSession, dir: String): DataFrame = {
-    val c = t(s, dir, "customer").where(col("c_acctbal") < 0)
+    val c = load(s, dir, "customer").where(col("c_acctbal") < 0)
       .select(col("c_custkey"), col("c_name"))
-    val o = t(s, dir, "orders")
+    val o = load(s, dir, "orders")
       .groupBy("o_custkey").agg(count(lit(1)).as("n_orders"))
     c.join(o, c("c_custkey") === o("o_custkey"), "full_outer")
       .select(
@@ -286,7 +286,7 @@ object RelationalOps {
     * 2→insert under key+10⁹) so the DuckDB oracle replays it exactly.
     */
   def cdcApply(s: SparkSession, dir: String): DataFrame = {
-    val base = t(s, dir, "orders").select(
+    val base = load(s, dir, "orders").select(
       col("o_orderkey"), col("o_custkey"),
       col("o_totalprice").cast(dec12).cast(DoubleType).as("price"),
       col("o_orderstatus"))
@@ -314,7 +314,6 @@ object RelationalOps {
     * (the average computed in decimal for cross-engine exactness).
     */
   def scalarSubquery(s: SparkSession, dir: String): DataFrame = {
-    GraftSession.tuned(s)
     Tables.registerAll(s, dir)
     // price > avg stated as price × count > sum: exact decimal/integer
     // arithmetic on both engines (an AVG would round — Spark decimal
@@ -338,7 +337,6 @@ object RelationalOps {
     * and half-cent-boundary customers could flip rows between engines.
     */
   def correlatedSubquery(s: SparkSession, dir: String): DataFrame = {
-    GraftSession.tuned(s)
     Tables.registerAll(s, dir)
     s.sql(
       """SELECT o.o_orderkey, o.o_custkey,
@@ -358,7 +356,6 @@ object RelationalOps {
     * (inner lateral semantics).
     */
   def lateralTopN(s: SparkSession, dir: String): DataFrame = {
-    GraftSession.tuned(s)
     Tables.registerAll(s, dir)
     s.sql(
       """SELECT c.c_custkey, t.o_orderkey,
@@ -377,7 +374,7 @@ object RelationalOps {
     * this reproducible — the pattern any grouped-gather needs at scale.
     */
   def collectSorted(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "customer")
+    load(s, dir, "customer")
       .where(col("c_custkey") < 200)
       .groupBy("c_mktsegment")
       .agg(concat_ws(",", sort_array(collect_list(col("c_custkey")))).as("custkeys"))
@@ -385,7 +382,7 @@ object RelationalOps {
 
   /** U+: UNION with distinct semantics (vs the reference's UNION ALL). */
   def unionDistinct(s: SparkSession, dir: String): DataFrame = {
-    val o = t(s, dir, "orders")
+    val o = load(s, dir, "orders")
     o.where(col("o_orderstatus") === "F").select(col("o_custkey"))
       .union(o.where(col("o_orderpriority") === "1-URGENT").select(col("o_custkey")))
       .distinct()
@@ -397,13 +394,13 @@ object RelationalOps {
     * a keyed join (the plan audit asserts no accidental cartesians).
     */
   def crossJoinDims(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "region").select(col("r_regionkey"), col("r_name"))
-      .crossJoin(t(s, dir, "nation").select(col("n_nationkey"), col("n_name")))
+    load(s, dir, "region").select(col("r_regionkey"), col("r_name"))
+      .crossJoin(load(s, dir, "nation").select(col("n_nationkey"), col("n_name")))
       .orderBy("r_regionkey", "n_nationkey")
 
   /** U+: INTERSECT (distinct set semantics) of two key projections. */
   def intersectKeys(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem")
+    val li = load(s, dir, "lineitem")
     li.where(col("l_returnflag") === "R").select(col("l_orderkey"))
       .intersect(li.where(col("l_linestatus") === "F").select(col("l_orderkey")))
       .orderBy("l_orderkey")
@@ -411,7 +408,7 @@ object RelationalOps {
 
   /** U+: EXCEPT (distinct set semantics) of two key projections. */
   def exceptKeys(s: SparkSession, dir: String): DataFrame = {
-    val o = t(s, dir, "orders")
+    val o = load(s, dir, "orders")
     o.select(col("o_custkey"))
       .except(o.where(col("o_orderstatus") === "F").select(col("o_custkey")))
       .orderBy("o_custkey")
@@ -422,7 +419,7 @@ object RelationalOps {
     * the grouping id exactly as a warehouse report would.
     */
   def rollupAgg(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
+    load(s, dir, "lineitem")
       .rollup(col("l_returnflag"), col("l_linestatus"))
       .agg(
         grouping_id().as("gid"),
@@ -436,7 +433,7 @@ object RelationalOps {
     * the oracle expresses the same thing with FILTER aggregates.
     */
   def pivotStatus(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "orders")
+    load(s, dir, "orders")
       .groupBy(col("o_orderpriority"))
       .pivot("o_orderstatus", Seq("F", "O", "P"))
       .agg(sum(col("o_totalprice").cast(dec12)).cast(dec18).cast(DoubleType))
@@ -458,7 +455,7 @@ object RelationalOps {
     * arithmetic, month boundaries.
     */
   def dateFuncs(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "orders")
+    load(s, dir, "orders")
       .select(
         col("o_orderkey"),
         col("o_orderdate").cast(DateType).as("d"),
@@ -474,7 +471,7 @@ object RelationalOps {
 
   /** F+: conditional expressions — CASE, nullif, nvl2, greatest/least. */
   def conditionalFuncs(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "orders")
+    load(s, dir, "orders")
       .select(
         col("o_orderkey"),
         when(col("o_orderstatus") === "F", "finished")
@@ -492,7 +489,7 @@ object RelationalOps {
     * jitter cannot flip a 6-dp rounding at these magnitudes.
     */
   def percentiles(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "orders")
+    load(s, dir, "orders")
       .groupBy(col("o_orderpriority"))
       .agg(
         expr("percentile(o_totalprice, 0.5)").cast(DecimalType(18, 6))
@@ -511,7 +508,7 @@ object RelationalOps {
     * against the exact key.
     */
   def approxPercentiles(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "orders")
+    load(s, dir, "orders")
       .groupBy(col("o_orderpriority"))
       .agg(
         expr("approx_percentile(o_totalprice, 0.5, 1000)").as("approx_med"),
@@ -538,7 +535,7 @@ object RelationalOps {
     * engines.
     */
   def approxPercentileTwin(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "orders")
+    load(s, dir, "orders")
       .groupBy(col("o_orderpriority"))
       .agg(
         expr("approx_percentile(o_totalprice, 0.5, 1000)").as("amed"),
@@ -563,7 +560,7 @@ object RelationalOps {
     * — collect_list order is shuffle-dependent, the sort pins it.
     */
   def hofFuncs(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
+    load(s, dir, "lineitem")
       .groupBy(col("l_orderkey"))
       .agg(sort_array(collect_list(col("l_quantity").cast("int"))).as("qs"))
       .select(
@@ -589,7 +586,7 @@ object RelationalOps {
     // native graft_norm_text the recompute is cheap and the persist is
     // a wash (3.0 vs 3.1 s same fixture), so it was removed: the
     // doctrine is persist only for EXPENSIVE row-local upstreams.
-    val docs = t(s, dir, "documents")
+    val docs = load(s, dir, "documents")
       .select(col("doc_id"),
         substring(graft.functions.TextOps.normalizeText(col("text")), 1, 40).as("p"))
     val a = docs.select(col("doc_id").as("id1"), col("p").as("p1"))
@@ -611,7 +608,7 @@ object RelationalOps {
     * between a 32-partition Spark run and single-threaded DuckDB.
     */
   def statsAgg(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
+    load(s, dir, "lineitem")
       .select(col("l_returnflag"), col("l_quantity").cast("long").as("q"))
       .groupBy("l_returnflag")
       // Σq² and the (nΣq² − (Σq)²) formula run in DECIMAL(38,0) —
@@ -646,7 +643,7 @@ object RelationalOps {
     * ETL needs when join keys come from failed casts.
     */
   def nullSafeJoin(s: SparkSession, dir: String): DataFrame = {
-    val orders = t(s, dir, "orders")
+    val orders = load(s, dir, "orders")
       // orders with a digit-9-bearing key get a NULL bucket — a
       // deterministic NULL population on both sides
       .select(col("o_orderkey"),
@@ -672,7 +669,7 @@ object RelationalOps {
     * map/array columns don't survive the driver's canonicalization.
     */
   def mapFuncs(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
+    load(s, dir, "lineitem")
       .select(col("l_orderkey"),
         col("l_linenumber").cast("int").as("ln"),
         col("l_quantity").cast("int").as("q"))
@@ -696,7 +693,7 @@ object RelationalOps {
     * domain: exact on both engines by construction.
     */
   def bitwiseFuncs(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "orders")
+    load(s, dir, "orders")
       .select(
         col("o_orderkey"),
         col("o_orderkey").bitwiseAND(lit(255)).as("and_255"),
@@ -727,7 +724,7 @@ object RelationalOps {
       col("sx").cast("double"), col("sy").cast("double"))
     val (sxx, syy, sxy) = (col("sxx").cast("double"),
       col("syy").cast("double"), col("sxy").cast("double"))
-    t(s, dir, "lineitem")
+    load(s, dir, "lineitem")
       .select(col("l_returnflag"),
         col("l_quantity").cast("long").as("x"),
         col("l_linenumber").cast("long").as("y"))
@@ -774,7 +771,7 @@ object RelationalOps {
     // constant-x groups zero the slope denominator: nullif on both
     // engines (Spark x/0 = NULL vs DuckDB NaN — the D3 audit class)
     val slope = (n * sxy - sx * sy) / nullif(n * sxx - sx * sx, lit(0.0))
-    t(s, dir, "lineitem")
+    load(s, dir, "lineitem")
       .select(col("l_returnflag"),
         col("l_quantity").cast("long").as("x"),
         floor(col("l_extendedprice")).cast("long").as("y"))
@@ -814,7 +811,7 @@ object RelationalOps {
     val m3 = s3 / n - lit(3.0) * mu * (s2 / n) + lit(2.0) * mu * mu * mu
     val m4 = s4 / n - lit(4.0) * mu * (s3 / n) +
       lit(6.0) * mu * mu * (s2 / n) - lit(3.0) * mu * mu * mu * mu
-    t(s, dir, "lineitem")
+    load(s, dir, "lineitem")
       .select(col("l_returnflag"), col("l_quantity").cast("long").as("x"))
       .groupBy("l_returnflag")
       // DECIMAL(38,0) raw moments (oracle: HUGEINT): Σx⁴ has only
@@ -842,7 +839,7 @@ object RelationalOps {
     * without a map type (DuckDB has no str_to_map).
     */
   def strToMap(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
+    load(s, dir, "events")
       // coalesce each component: concat null-propagates, so one NULL
       // column would nuke the whole cfg string (and diverge from an
       // oracle projecting the raw columns). "uid=" parses to '', which
@@ -865,7 +862,7 @@ object RelationalOps {
     * rows with the ordinal kept).
     */
   def posExplodeTokens(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
+    load(s, dir, "documents")
       .select(col("doc_id"),
         split(graft.functions.TextOps.normalizeText(col("text")), " ").as("toks"))
       .selectExpr("doc_id", "posexplode(slice(toks, 1, 5)) AS (pos, tok)")
@@ -875,14 +872,14 @@ object RelationalOps {
     * min / difference), distinct from the set-semantics pair above.
     */
   def intersectAllKeys(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem")
+    val li = load(s, dir, "lineitem")
     li.where(col("l_returnflag") === "R").select(col("l_orderkey"))
       .intersectAll(li.where(col("l_linestatus") === "F").select(col("l_orderkey")))
       .orderBy("l_orderkey")
   }
 
   def exceptAllKeys(s: SparkSession, dir: String): DataFrame = {
-    val o = t(s, dir, "orders")
+    val o = load(s, dir, "orders")
     o.select(col("o_custkey"))
       .exceptAll(o.where(col("o_orderstatus") === "F").select(col("o_custkey")))
       .orderBy("o_custkey")
@@ -929,7 +926,7 @@ object RelationalOps {
     * on every fixture SF.
     */
   def snapshotDiffQuery(s: SparkSession, dir: String): DataFrame = {
-    val orders = t(s, dir, "orders")
+    val orders = load(s, dir, "orders")
     val oldSnap = orders.where(col("o_orderkey") % 7 =!= 0)
     val newSnap = orders.where(col("o_orderkey") % 5 =!= 0)
       .withColumn("o_totalprice",
@@ -943,7 +940,6 @@ object RelationalOps {
     * over; run through spark.sql like the reference's query style.
     */
   def groupingSets(s: SparkSession, dir: String): DataFrame = {
-    GraftSession.tuned(s)
     Tables.registerAll(s, dir)
     s.sql(
       """SELECT l_returnflag, l_linestatus,
@@ -958,7 +954,6 @@ object RelationalOps {
     * sums without a self-join or CASE pyramid.
     */
   def aggFilter(s: SparkSession, dir: String): DataFrame = {
-    GraftSession.tuned(s)
     Tables.registerAll(s, dir)
     s.sql(
       """SELECT l_returnflag,
@@ -972,7 +967,7 @@ object RelationalOps {
     * prefixes), disambiguated by the grouping bitmask.
     */
   def cubeAgg(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
+    load(s, dir, "lineitem")
       .cube(col("l_returnflag"), col("l_linestatus"))
       .agg(
         grouping_id().as("gid"),
@@ -1000,7 +995,6 @@ object RelationalOps {
       |SELECT o_custkey, cust_revenue, n_orders FROM cust_rev ORDER BY o_custkey""".stripMargin
 
   def cte(s: SparkSession, dir: String): DataFrame = {
-    GraftSession.tuned(s)
     Tables.registerAll(s, dir)
     s.sql(cteSql)
   }
@@ -1010,7 +1004,7 @@ object RelationalOps {
     * two-phase partial/final pattern).
     */
   def groupAgg(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
+    load(s, dir, "lineitem")
       .groupBy("l_returnflag", "l_linestatus")
       .agg(
         count(lit(1)).as("cnt"),
@@ -1032,11 +1026,11 @@ object RelationalOps {
     */
   def joinChain(s: SparkSession, dir: String): DataFrame = {
     val a = allSales(s, dir).as("a")
-    val b = t(s, dir, "orders").as("b")
-    val c = t(s, dir, "customer").as("c")
-    val n = t(s, dir, "nation").as("n")
-    val r = t(s, dir, "region").as("r")
-    val f = t(s, dir, "supplier").as("f")
+    val b = load(s, dir, "orders").as("b")
+    val c = load(s, dir, "customer").as("c")
+    val n = load(s, dir, "nation").as("n")
+    val r = load(s, dir, "region").as("r")
+    val f = load(s, dir, "supplier").as("f")
     a.join(b, col("a.l_orderkey") === col("b.o_orderkey"), "left_outer")
       .join(c, col("b.o_custkey") === col("c.c_custkey"), "left_outer")
       .join(n, col("c.c_nationkey") === col("n.n_nationkey"), "left_outer")

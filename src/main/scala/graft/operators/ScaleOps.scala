@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.engine.Tables.load
+
 /** Scale utilities for the 100 TB design notes (SURVEY §7.5): skew-salted
   * joins, bucketed co-located joins, and partitioned sinks. These are
   * engine API, exercised by ScaleOpsSpec; they have no reference-grounded
@@ -43,9 +45,9 @@ object ScaleOps {
     * rewrite is semantics-preserving, not just fast.
     */
   def saltedJoinQuery(s: SparkSession, dir: String): DataFrame = {
-    val orders = graft.engine.Tables.load(graft.engine.GraftSession.tuned(s), dir, "orders")
+    val orders = load(s, dir, "orders")
       .select(col("o_orderkey"), col("o_custkey").as("k"))
-    val customer = graft.engine.Tables.load(s, dir, "customer")
+    val customer = load(s, dir, "customer")
       .select(col("c_custkey").as("k"), col("c_name"))
     saltedLeftJoin(orders, customer, "k", buckets = 8)
       .select(col("o_orderkey"), col("c_name"))
@@ -60,9 +62,8 @@ object ScaleOps {
     * partitioned round-trip is lossless. This is the replacement for the
     * reference's `coalesce(1)` single-file sink (SURVEY §7.4 risk 7).
     */
-  def partitionedSinkQuery(s: SparkSession, dir: String): DataFrame = {
-    val spark = graft.engine.GraftSession.tuned(s)
-    val orders = graft.engine.Tables.load(spark, dir, "orders")
+  def partitionedSinkQuery(spark: SparkSession, dir: String): DataFrame = {
+    val orders = load(spark, dir, "orders")
       .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
         col("o_orderpriority"))
     // applicationId in the path: two concurrent drivers (e.g. Bench and
@@ -121,20 +122,16 @@ object ScaleOps {
   }
 
   /** q_skew_report over lineitem's supplier key. */
-  def skewReportQuery(s: SparkSession, dir: String): DataFrame = {
-    val spark = graft.engine.GraftSession.tuned(s)
-    keySkewReport(
-      graft.engine.Tables.load(spark, dir, "lineitem"), "l_suppkey")
-  }
+  def skewReportQuery(spark: SparkSession, dir: String): DataFrame =
+    keySkewReport(load(spark, dir, "lineitem"), "l_suppkey")
 
   /** Cross-engine-exact Morton codes over (custkey bucket, order-day
     * bucket): the sort key [[writeZOrdered]] lays files out by. The
     * registered query pins `graft_zorder`'s bit interleave against
     * DuckDB's explicit shift-and-sum arithmetic, row for row.
     */
-  def zorderQuery(s: SparkSession, dir: String): DataFrame = {
-    val spark = graft.engine.GraftSession.tuned(s)
-    graft.engine.Tables.load(spark, dir, "orders")
+  def zorderQuery(spark: SparkSession, dir: String): DataFrame = {
+    load(spark, dir, "orders")
       .select(
         col("o_orderkey"),
         (col("o_custkey") % 1024).as("x"),
@@ -200,13 +197,12 @@ object ScaleOps {
     * guarantee: no row matching the predicate lives in a skippable
     * granule.
     */
-  def minmaxIndex(s: SparkSession, dir: String): DataFrame = {
-    val spark = graft.engine.GraftSession.tuned(s)
+  def minmaxIndex(spark: SparkSession, dir: String): DataFrame = {
     // epoch-micros window bounds, written as the same numeric literals
     // in the oracle (timestamp-literal parsing differences can't bite)
     val lo = lit(857174400000000L) // 1997-03-01 00:00 UTC
     val hi = lit(875577600000000L) // 1997-09-30 00:00 UTC
-    graft.engine.Tables.load(spark, dir, "lineitem")
+    load(spark, dir, "lineitem")
       .select(
         (year(col("l_shipdate")) * 100 + month(col("l_shipdate")))
           .cast("long").as("granule"),
@@ -252,10 +248,9 @@ object ScaleOps {
     * 1-row-bounded. The callable production build is [[buildBloom]];
     * this digest is its oracle-comparable twin.
     */
-  def bloomFilter(s: SparkSession, dir: String): DataFrame = {
-    val spark = graft.engine.GraftSession.tuned(s)
+  def bloomFilter(spark: SparkSession, dir: String): DataFrame = {
     val kHashes = 4
-    val keys = graft.engine.Tables.load(spark, dir, "customer")
+    val keys = load(spark, dir, "customer")
       .select("c_custkey").distinct()
     // size the filter from the data: 8 bits/key (fp ≈ 2.4% at k=4),
     // word-aligned, in PURE INTEGER arithmetic both engines repeat
@@ -284,7 +279,7 @@ object ScaleOps {
           count(lit(1)).as(s"n_${label}_probes"),
           sum(when(col("misses") === 0L, 1L).otherwise(0L))
             .as(s"n_${label}_in"))
-    val present = graft.engine.Tables.load(spark, dir, "orders")
+    val present = load(spark, dir, "orders")
       .select(col("o_custkey").as("probe")).distinct()
     // shift past the KEY DOMAIN (o_custkey ⊆ c_custkey), derived from
     // the data so a bigger fixture cannot alias shifted probes onto
@@ -374,10 +369,9 @@ object ScaleOps {
     * scale; zero false negatives by the shared-recipe argument
     * (probe and build positions are the same expression).
     */
-  def bloomSkipIndex(s: SparkSession, dir: String): DataFrame = {
-    val spark = graft.engine.GraftSession.tuned(s)
+  def bloomSkipIndex(spark: SparkSession, dir: String): DataFrame = {
     val kHashes = 4
-    val orders = graft.engine.Tables.load(spark, dir, "orders")
+    val orders = load(spark, dir, "orders")
     val granule = expr(
       "CAST(year(o_orderdate) * 100 + month(o_orderdate) AS BIGINT)")
     val gk = orders.select(granule.as("granule"), col("o_custkey")).distinct()
@@ -452,10 +446,9 @@ object ScaleOps {
     * customer keys, then exactly joined — hash-identical to the plain
     * filtered join.
     */
-  def bloomJoinQuery(s: SparkSession, dir: String): DataFrame = {
-    val spark = graft.engine.GraftSession.tuned(s)
-    val orders = graft.engine.Tables.load(spark, dir, "orders")
-    val dim = graft.engine.Tables.load(spark, dir, "customer")
+  def bloomJoinQuery(spark: SparkSession, dir: String): DataFrame = {
+    val orders = load(spark, dir, "orders")
+    val dim = load(spark, dir, "customer")
       .where(col("c_mktsegment") === "BUILDING")
       .select(col("c_custkey"), col("c_name"))
     bloomPrefilteredJoin(orders, dim, "o_custkey", "c_custkey")
@@ -494,8 +487,7 @@ object ScaleOps {
     * a mid-January cutoff == one-shot recompute over the full table.
     */
   def incrementalAggQuery(s: SparkSession, dir: String): DataFrame = {
-    val events = graft.engine.Tables.load(
-      graft.engine.GraftSession.tuned(s), dir, "events")
+    val events = load(s, dir, "events")
     val cutoff = lit("2024-01-16 00:00:00").cast("timestamp")
     val base = eventAgg(events.where(col("ts") < cutoff))
     val delta = eventAgg(events.where(col("ts") >= cutoff))
@@ -509,9 +501,8 @@ object ScaleOps {
     * even narrower. Oracle: the xy2d quadrant-rotation walk unrolled
     * into ten generated CTE levels of pure integer CASE arithmetic.
     */
-  def hilbertQuery(s: SparkSession, dir: String): DataFrame = {
-    val spark = graft.engine.GraftSession.tuned(s)
-    graft.engine.Tables.load(spark, dir, "orders")
+  def hilbertQuery(spark: SparkSession, dir: String): DataFrame = {
+    load(spark, dir, "orders")
       .select(
         col("o_orderkey"),
         (col("o_custkey") % 1024).as("x"),
@@ -570,11 +561,10 @@ object ScaleOps {
     */
   def joinSizeEstimate(s: SparkSession, dir: String,
       depth: Int = 4, width: Long = 1024L): DataFrame = {
-    val tuned = graft.engine.GraftSession.tuned(s)
-    val a = graft.engine.Tables.load(tuned, dir, "events")
+    val a = load(s, dir, "events")
       .select(col("user_id").as("key")).groupBy("key")
       .agg(count(lit(1)).as("ca"))
-    val b = graft.engine.Tables.load(tuned, dir, "orders")
+    val b = load(s, dir, "orders")
       .select(col("o_custkey").as("key")).groupBy("key")
       .agg(count(lit(1)).as("cb"))
     def posCol(k: Column, i: Column): Column =

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.GraftQuery
-import graft.engine.Tables.t
+import graft.engine.Tables.load
 
 /** Typed top-k via a custom `Aggregator[IN, BUF, OUT]` — the scale
   * alternative to the `row_number()` window (SURVEY §2.11).
@@ -55,7 +55,7 @@ object TopK {
   def topkAgg(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val k = 5
-    val ds = t(s, dir, "customer")
+    val ds = load(s, dir, "customer")
       .select(
         col("c_mktsegment"), col("c_custkey"), col("c_name"),
         col("c_acctbal").as("acctbal_raw"),
@@ -133,7 +133,7 @@ object TopK {
   val queries: Seq[GraftQuery] = Seq(
     GraftQuery("q_skyline",
       "2-D Pareto frontier (min price, max size): bucket-prefilter + exact dominance windows over survivors only",
-      (s, dir) => skyline(t(s, dir, "part")),
+      (s, dir) => skyline(load(s, dir, "part")),
       Some(
         """WITH base AS (
           |  SELECT p_partkey, p_retailprice, CAST(p_size AS BIGINT) AS size,

@@ -6,8 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.GraftQuery
-import graft.engine.GraftSession
-import graft.engine.Tables.t
+import graft.engine.Tables.load
 
 /** Sorts, limits, top-k and window functions (SURVEY.md §2.5 — absent
   * from the reference, declared Tier B there). All oracle-checked.
@@ -24,7 +23,7 @@ object WindowOps {
 
   /** ORDER BY … LIMIT n → TakeOrderedAndProject (no full sort at scale). */
   def sortLimit(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "orders")
+    load(s, dir, "orders")
       .select(
         col("o_orderkey"),
         col("o_totalprice").cast(dec12).cast(DoubleType).as("total_price"),
@@ -36,7 +35,7 @@ object WindowOps {
   def topkWindow(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("c_mktsegment"))
       .orderBy(col("c_acctbal").desc, col("c_custkey"))
-    t(s, dir, "customer")
+    load(s, dir, "customer")
       .withColumn("rn", row_number().over(w))
       .where(col("rn") <= 5)
       .select(
@@ -50,7 +49,7 @@ object WindowOps {
     val w = Window.partitionBy(col("o_custkey"))
       .orderBy(col("o_orderdate"), col("o_orderkey"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    t(s, dir, "orders")
+    load(s, dir, "orders")
       .select(
         col("o_custkey"), col("o_orderkey"),
         col("o_totalprice").cast(dec12).cast(DoubleType).as("price"),
@@ -63,7 +62,7 @@ object WindowOps {
   def lagLead(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("o_custkey"))
       .orderBy(col("o_orderdate"), col("o_orderkey"))
-    t(s, dir, "orders")
+    load(s, dir, "orders")
       .select(
         col("o_custkey"), col("o_orderkey"),
         col("o_totalprice").cast(dec12).cast(DoubleType).as("price"),
@@ -87,7 +86,7 @@ object WindowOps {
     val w = Window.partitionBy(col("o_custkey"))
       .orderBy(col("day_num"))
       .rangeBetween(-90, Window.currentRow)
-    t(s, dir, "orders")
+    load(s, dir, "orders")
       .withColumn("day_num",
         datediff(col("o_orderdate"), lit("1992-01-01").cast(DateType)))
       .select(
@@ -104,7 +103,7 @@ object WindowOps {
     */
   def ratioToReport(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("o_custkey"))
-    t(s, dir, "orders")
+    load(s, dir, "orders")
       .select(
         col("o_custkey"), col("o_orderkey"),
         col("o_totalprice").cast(dec12).as("price"),
@@ -136,7 +135,7 @@ object WindowOps {
   def scd2(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("ts_us"), col("event_id"))
-    val e = t(s, dir, "events")
+    val e = load(s, dir, "events")
       .select(
         col("user_id"), col("event_id"),
         unix_micros(col("ts")).as("ts_us"),
@@ -165,7 +164,7 @@ object WindowOps {
   def scd2Lookup(s: SparkSession, dir: String): DataFrame = {
     val dim = scd2(s, dir)
       .select(col("user_id"), col("valid_from_us").as("ts_us"), col("attr"))
-    val facts = t(s, dir, "events")
+    val facts = load(s, dir, "events")
       .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
         col("event_id"))
     AsOfJoin.asOfJoinLast(facts, dim, "user_id", "ts_us", Seq("attr"))
@@ -210,9 +209,8 @@ object WindowOps {
     * the inherent, bounded price of the two-pass shape.
     */
   def rankStats(s: SparkSession, dir: String): DataFrame = {
-    val spark = GraftSession.tuned(s)
-    rankStatsOf(t(s, dir, "customer"),
-      spark.sessionState.conf.numShufflePartitions)
+    rankStatsOf(load(s, dir, "customer"),
+      s.sessionState.conf.numShufflePartitions)
   }
 
   /** df-level core of [[rankStats]] (needs c_mktsegment, c_custkey,
@@ -318,7 +316,7 @@ object WindowOps {
     val w = Window.partitionBy(col("o_custkey"))
       .orderBy(col("o_orderdate"), col("o_orderkey"))
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    t(s, dir, "orders")
+    load(s, dir, "orders")
       .select(
         col("o_custkey"), col("o_orderkey"),
         first(col("o_orderkey")).over(w).as("first_order"),
@@ -360,7 +358,7 @@ object WindowOps {
   }
 
   def ewmaDyadic(s: SparkSession, dir: String): DataFrame =
-    ewmaOf(t(s, dir, "orders"))
+    ewmaOf(load(s, dir, "orders"))
 
   /** Rolling z-score anomaly flag: each order's price against its own
     * trailing-8 window statistics — the streaming-adjacent "is this
@@ -376,7 +374,7 @@ object WindowOps {
       .orderBy(col("o_orderdate"), col("o_orderkey"))
       .rowsBetween(-7, Window.currentRow)
     val cents = floor(col("o_totalprice") * 100 + 0.5).cast(LongType)
-    t(s, dir, "orders")
+    load(s, dir, "orders")
       .select(col("o_custkey"), col("o_orderkey"),
         col("o_totalprice").cast(dec12).cast(DoubleType).as("price"),
         cents.as("cents"),
@@ -415,7 +413,7 @@ object WindowOps {
     // tus is epoch-micros of ts — same total order, already projected
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("tus"), col("event_id"))
-    t(s, dir, "events")
+    load(s, dir, "events")
       .select(col("user_id"),
         unix_micros(col("ts")).as("tus"),
         floor(col("value") * 1000 + 0.5).cast(LongType).as("vmilli"),
@@ -448,7 +446,7 @@ object WindowOps {
     * family (q_bitmap_distinct) is the multi-word form.
     */
   def rollingDistinct(s: SparkSession, dir: String): DataFrame = {
-    val events = t(s, dir, "events")
+    val events = load(s, dir, "events")
     val dict = events.select(col("event_type")).distinct()
       .withColumn("tid",
         row_number().over(Window.orderBy(col("event_type"))).cast(LongType) - 1)

@@ -40,7 +40,8 @@ import graft.functions.JaccardExpr
   * `Rule[LogicalPlan]` registered through
   * `SparkSessionExtensions.injectOptimizerRule`
   * ([[graft.GraftExtensions]]) and
-  * `spark.experimental.extraOptimizations` (GraftSession.tuned).
+  * `spark.experimental.extraOptimizations` (GraftSession.tuned, applied
+  * where a session enters the library).
   */
 object JaccardRewrite extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformAllExpressions {

@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.GraftQuery
-import graft.engine.{GraftSession, Tables}
-import graft.engine.Tables.t
+import graft.engine.Tables
+import graft.engine.Tables.load
 
 /** Typed state for [[EventOps.streamingUserStateCounts]]. */
 final case class UserState(n: Long, sum: Double)
@@ -72,7 +72,7 @@ object EventOps {
     * strings are.
     */
   def tumblingAgg(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
+    load(s, dir, "events")
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(
         count(lit(1)).as("n_events"),
@@ -84,7 +84,7 @@ object EventOps {
 
   /** Sliding 1-hour windows every 30 minutes (each event lands in 2). */
   def slidingAgg(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
+    load(s, dir, "events")
       .groupBy(window(col("ts"), "1 hour", "30 minutes"), col("event_type"))
       .agg(count(lit(1)).as("n_events"))
       .select(
@@ -98,7 +98,7 @@ object EventOps {
     * surface of an event pipeline.
     */
   def jsonFuncs(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
+    load(s, dir, "events")
       .select(
         col("event_id"),
         get_json_object(col("props"), "$.k").as("k_str"),
@@ -117,7 +117,7 @@ object EventOps {
     * `>= gap` new-session marker in a gaps-and-islands rewrite.
     */
   def sessionAgg(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
+    load(s, dir, "events")
       .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
       .agg(
         count(lit(1)).as("n_events"),
@@ -132,7 +132,7 @@ object EventOps {
     * user_id; at 100 TB this is the canonical partial/final aggregate.
     */
   def userStats(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
+    load(s, dir, "events")
       .groupBy("user_id")
       .agg(
         count(lit(1)).as("n_events"),
@@ -149,7 +149,6 @@ object EventOps {
     * streaming operator reads through this ONE definition.
     */
   private def eventStream(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tuned(spark)
     val raw = spark.read.parquet(s"$sfDir/events.parquet").schema
     Tables.normalizeEventTs(spark.readStream
       .schema(raw)
@@ -178,7 +177,7 @@ object EventOps {
     * predicate ⇒ one shuffle on user_id, range filter inside the join.
     */
   def attributionJoin(s: SparkSession, dir: String): DataFrame = {
-    val ev = t(s, dir, "events")
+    val ev = load(s, dir, "events")
     val clicks = ev.where(col("event_type") === "click")
       .select(col("user_id"), col("event_id").as("click_id"),
         col("ts").as("click_ts"))
@@ -792,7 +791,6 @@ object EventOps {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
     import org.apache.spark.sql.types._
-    GraftSession.tuned(spark)
     val gapUs = 1800L * 1000000L
     spark.readStream
       .schema(StructType(Seq(
@@ -864,7 +862,6 @@ object EventOps {
     * exact count equality.
     */
   def streamingUrlDedup(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tuned(spark)
     val raw = spark.read.parquet(s"$sfDir/documents.parquet").schema
     spark.readStream
       .schema(raw)
@@ -903,7 +900,7 @@ object EventOps {
     * prep step for ML feature series / monitoring dashboards.
     */
   def gapFillDaily(s: SparkSession, dir: String): DataFrame = {
-    val daily = t(s, dir, "events")
+    val daily = load(s, dir, "events")
       .groupBy(col("user_id"), to_date(col("ts")).as("day"))
       .agg(
         count(lit(1)).as("n_events"),
@@ -960,7 +957,7 @@ object EventOps {
   private def labeledSessions(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy("user_id")
       .orderBy(col("ts_us").asc_nulls_first, col("event_id").asc_nulls_first)
-    t(s, dir, "events")
+    load(s, dir, "events")
       .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("ts_us"))
       .withColumn("prev_us", lag("ts_us", 1).over(w))
       .withColumn("new_sess",
@@ -990,7 +987,7 @@ object EventOps {
     */
   def transitionMatrix(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-    val trans = t(s, dir, "events")
+    val trans = load(s, dir, "events")
       .select(col("user_id"), col("event_id"),
         unix_micros(col("ts")).as("ts_us"), col("event_type"))
       .withColumn("prev_type", lag("event_type", 1).over(w))
@@ -1020,7 +1017,7 @@ object EventOps {
     */
   def markovStationary(s: SparkSession, dir: String, iters: Int = 6): DataFrame = {
     val w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-    val trans = t(s, dir, "events")
+    val trans = load(s, dir, "events")
       .select(col("user_id"), col("event_id"),
         unix_micros(col("ts")).as("ts_us"), col("event_type"))
       .withColumn("prev_type", lag("event_type", 1).over(w))
@@ -1109,7 +1106,7 @@ object EventOps {
   def movingWindow(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy("user_id").orderBy(col("ts_us"))
       .rangeBetween(-1800L * 1000000L, 0L)
-    t(s, dir, "events")
+    load(s, dir, "events")
       .select(col("user_id"), col("event_id"),
         unix_micros(col("ts")).as("ts_us"),
         (col("value") * 100).cast("long").as("cents"))
@@ -1126,7 +1123,7 @@ object EventOps {
     * sort, no window.
     */
   def modeType(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
+    load(s, dir, "events")
       // NULL types fold to '' BEFORE the argmax: on a tied count Spark
       // orders a null struct field SMALLEST but DuckDB orders it
       // LARGEST, so an unguarded NULL could win on one engine and lose
@@ -1154,7 +1151,7 @@ object EventOps {
     * reduces from user-grain in a final 1-row-per-step aggregate.
     */
   def funnel(s: SparkSession, dir: String): DataFrame = {
-    val ev = t(s, dir, "events")
+    val ev = load(s, dir, "events")
       .select(col("user_id"), col("event_type"),
         unix_micros(col("ts")).as("ts_us"))
     val (s1, s2, s3) = funnelStages(ev)
@@ -1204,12 +1201,11 @@ object EventOps {
     * the two extra pass-1 scans prune to one long column.
     */
   def concurrencyProfile(s: SparkSession, dir: String): DataFrame = {
-    val spark = GraftSession.tuned(s)
     concurrencyOf(
       labeledSessions(s, dir)
         .groupBy("user_id", "session_seq")
         .agg(min("ts_us").as("start_us"), max("ts_us").as("end_us")),
-      spark.sessionState.conf.numShufflePartitions)
+      s.sessionState.conf.numShufflePartitions)
   }
 
   /** df-level core of [[concurrencyProfile]] (needs start_us, end_us) —
@@ -1274,7 +1270,7 @@ object EventOps {
     * as the batch aggregates.
     */
   def funnelUserTimes(s: SparkSession, dir: String): DataFrame = {
-    val ev = t(s, dir, "events")
+    val ev = load(s, dir, "events")
       .select(col("user_id"), col("event_type"),
         unix_micros(col("ts")).as("ts_us"))
     val (s1, s2, s3) = funnelStages(ev)
@@ -1382,7 +1378,7 @@ object EventOps {
   def retentionCohorts(s: SparkSession, dir: String): DataFrame = {
     val weekCol = expr(
       "datediff(CAST(ts AS DATE), DATE '2024-01-01') div 7").cast("long")
-    val ev = t(s, dir, "events")
+    val ev = load(s, dir, "events")
       .select(col("user_id"), weekCol.as("week"))
     val cohort = ev.groupBy("user_id").agg(min("week").as("cohort_week"))
     val cohortSize = cohort.groupBy("cohort_week")
@@ -1479,7 +1475,7 @@ object EventOps {
       Some(markovOracleSql())),
     GraftQuery("q_event_gaps",
       "per-event inter-arrival micros since the user's previous event (lag window; O(1)-state streaming twin)",
-      (s, dir) => eventGaps(t(s, dir, "events")),
+      (s, dir) => eventGaps(load(s, dir, "events")),
       Some(
         """WITH g AS (
           |  SELECT user_id, event_id,
@@ -1491,7 +1487,7 @@ object EventOps {
           |ORDER BY user_id, event_id""".stripMargin)),
     GraftQuery("q_user_paths",
       "top onboarding paths: first-3-event-type sequences per user, counted (bounded path domain)",
-      (s, dir) => userPaths(t(s, dir, "events")),
+      (s, dir) => userPaths(load(s, dir, "events")),
       Some(
         """WITH r AS (
           |  SELECT user_id, event_type,
@@ -1507,7 +1503,7 @@ object EventOps {
           |FROM p GROUP BY path ORDER BY n_users DESC, path""".stripMargin)),
     GraftQuery("q_streaks",
       "longest consecutive-active-day streak per user (gaps-and-islands via day minus row_number)",
-      (s, dir) => activityStreaks(t(s, dir, "events")),
+      (s, dir) => activityStreaks(load(s, dir, "events")),
       Some(
         """WITH days AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events),
           |i AS (SELECT user_id, day,
@@ -1519,7 +1515,7 @@ object EventOps {
           |FROM g GROUP BY user_id ORDER BY user_id""".stripMargin)),
     GraftQuery("q_cusum_user",
       "per-user CUSUM monitoring vs a trained baseline (mu=50, slack=15): closed-form cum - running-min, integer micro-units",
-      (s, dir) => eventCusum(t(s, dir, "events"), 50000000L, 15000000L),
+      (s, dir) => eventCusum(load(s, dir, "events"), 50000000L, 15000000L),
       Some(
         """WITH z AS (
           |  SELECT user_id, event_id, ts,
@@ -1541,7 +1537,7 @@ object EventOps {
           |FROM r ORDER BY user_id, event_id""".stripMargin)),
     GraftQuery("q_abtest",
       "two-proportion A/B z-test: deterministic hash arms, high-value-purchase conversion, pooled z from exact counts",
-      (s, dir) => abTest(t(s, dir, "events")),
+      (s, dir) => abTest(load(s, dir, "events")),
       Some(
         """WITH u AS (
           |  SELECT user_id,

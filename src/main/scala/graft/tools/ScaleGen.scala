@@ -24,9 +24,9 @@ import org.apache.spark.sql.functions._
   *
   * Known type drift: the base fixture's events.ts is parquet
   * TIMESTAMP(NANOS); replicas re-emit it as plain INT64 nanos (Spark
-  * has no native NANOS type). Sessions reading through
-  * GraftSession.tuned/Tables.load (nanosAsLong) see the identical
-  * long either way — the generated dirs target graft.Bench, NOT the
+  * has no native NANOS type). Sessions carrying the GraftSession
+  * contract (nanosAsLong) read the identical long through Tables.load
+  * either way — the generated dirs target graft.Bench, NOT the
   * DuckDB oracle, which would read BIGINT instead of TIMESTAMP here.
   *
   * ADVERSARIAL-SKEW MODE (4th arg `skew`): the r10 de-windowing of the

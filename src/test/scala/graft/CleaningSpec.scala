@@ -329,7 +329,6 @@ class CleaningSpec extends SparkTestBase {
       (1L, "alpha alpha alpha", "en"), (2L, "alpha beta", "en"),
       (3L, "beta beta gamma", "fr"), (4L, "beta gamma", "fr"))
       .toDF("doc_id", "text", "lang")
-    graft.functions.HashExprs.register(spark)
     val got = Cleaning.domainShift(docs, "text", "lang", "en", 20)
       .collect().map(r =>
         (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))

@@ -74,6 +74,11 @@ class GraftExtensionsSpec extends AnyFunSuite {
       assert(engineFns.subsetOf(injectedFns),
         s"extension is missing: ${engineFns -- injectedFns}")
 
+      // the injected entries carry the table's usage text
+      val described = s.sql("DESCRIBE FUNCTION graft_jaccard")
+        .collect().map(_.getString(0)).mkString("\n")
+      assert(described.contains("Usage: graft_jaccard(a, b)"), described)
+
       // same expression trees as the temp-function path => same values
       val viaRegistry = {
         graft.functions.HashExprs.register(s)

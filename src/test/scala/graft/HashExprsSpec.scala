@@ -22,6 +22,29 @@ class HashExprsSpec extends SparkTestBase {
     assert(out(4L) == 0L) // empty doc hashes to 0
   }
 
+  test("graft_* calls with wrong arguments fail naming the signature; DESCRIBE prints the usage") {
+    // extra arguments must not be silently dropped, and missing ones
+    // must not surface as an unrelated index/empty-list error
+    Seq(
+      "graft_simhash64(array('a', 'b', 'c'), 1)" -> "graft_simhash64(array<string>)",
+      "graft_norm_text('A  b', 'x')" -> "graft_norm_text(string)",
+      "graft_edit1('ab', 'abc', 'zzz')" -> "graft_edit1(s1, s2)",
+      "graft_edit1('ab')" -> "graft_edit1(s1, s2)",
+      "graft_simhash64()" -> "graft_simhash64(array<string>)",
+      "graft_shingle_hashes(array('a', 'b'), length('ab'))" ->
+        "graft_shingle_hashes(array<string>, n int literal)"
+    ).foreach { case (call, signature) =>
+      val e = intercept[Exception](spark.sql(s"SELECT $call").collect())
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(_.getMessage).mkString("\n")
+      assert(msgs.contains(s"usage: $signature"), s"$call:\n$msgs")
+    }
+    val described = spark.sql("DESCRIBE FUNCTION graft_cosine")
+      .collect().map(_.getString(0)).mkString("\n")
+    assert(described.contains("Usage: graft_cosine(a, b) - cosine similarity of numeric arrays"),
+      described)
+  }
+
   test("graft_simhash64: single token equals that token's xxhash64 bit pattern") {
     // with one token, every bit with a 1 in the token hash wins the vote
     val row = Seq((1L, Seq("hello"))).toDF("id", "toks")

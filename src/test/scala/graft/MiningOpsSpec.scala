@@ -107,7 +107,6 @@ class MiningOpsSpec extends SparkTestBase {
 
   test("jaro-winkler expression: pinned reference vectors (incl. the DuckDB empty-string and boost-threshold conventions)") {
     import spark.implicits._
-    graft.functions.HashExprs.register(spark)
     val vecs = Seq(
       ("MARTHA", "MARHTA", 0.9611111111111111),   // classic Winkler example
       ("DWAYNE", "DUANE", 0.8400000000000001),

@@ -7,8 +7,6 @@ import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{Decimal, LongType}
 
-import graft.engine.GraftSession
-
 /** Mechanized overflow-widening audit.
   *
   * Three rounds of review found one-off instances of the same silent
@@ -109,7 +107,6 @@ class OverflowAuditSpec extends SparkTestBase
   }
 
   test("a deliberately-unwidened long-product sum IS flagged (detector works)") {
-    GraftSession.tuned(spark)
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val bad = docs.agg(sum(col("n_chars") * col("n_chars")).as("sq"))
     assert(audit(bad).exists(_.startsWith("sum-of-long-product")),
@@ -667,7 +664,6 @@ class OverflowAuditSpec extends SparkTestBase
   }
 
   test("a deliberately-unguarded divide and sqrt ARE flagged (D3/D4 detector works)") {
-    GraftSession.tuned(spark)
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     // the r8 mannWhitney shape: variance denominator that is 0 for a
     // single-element group, sqrt of a subtraction that FP can push < 0
@@ -715,7 +711,6 @@ class OverflowAuditSpec extends SparkTestBase
   }
 
   test("registered surface: every divide denominator / sqrt argument is guarded or allowlisted") {
-    GraftSession.tuned(spark)
     val findings = Catalog.byName.toSeq.sortBy(_._1).flatMap {
       case (name, q) =>
         val hits =
@@ -848,7 +843,6 @@ class OverflowAuditSpec extends SparkTestBase
       "set the numerator (sy − slope·sx) is NULL, so both engines " +
       "null-agree; slope and r² are already NULLIF-guarded"))
   test("registered surface: every long-product sum/log is widened or allowlisted") {
-    GraftSession.tuned(spark)
     val findings = Catalog.byName.toSeq.sortBy(_._1).flatMap {
       case (name, q) =>
         val hits =

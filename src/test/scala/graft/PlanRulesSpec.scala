@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.engine.GraftSession
 import graft.ext.Dedup
 
 /** The JaccardRewrite optimizer rule: value parity with the builtin
@@ -14,7 +13,6 @@ class PlanRulesSpec extends SparkTestBase {
   import spark.implicits._
 
   test("graft_jaccard == builtin composition on every edge (incl. NULL for 0/0)") {
-    GraftSession.tuned(spark)
     val rows = Seq(
       (1L, Seq(1L, 2L, 3L), Seq(2L, 3L, 4L)),   // overlap: 2/4
       (2L, Seq(1L, 2L), Seq(3L, 4L)),           // disjoint: 0/4
@@ -38,7 +36,6 @@ class PlanRulesSpec extends SparkTestBase {
   }
 
   test("null elements count as one distinct set member (array_intersect/union parity)") {
-    GraftSession.tuned(spark)
     val r = Seq((Seq[java.lang.Long](1L, null), Seq[java.lang.Long](null, 2L)))
       .toDF("a", "b")
       .select(
@@ -51,7 +48,6 @@ class PlanRulesSpec extends SparkTestBase {
   }
 
   test("null ARRAY input: rewritten builtin keeps legacy-size 1.0; raw function stays NULL") {
-    GraftSession.tuned(spark)
     // with ANSI off Spark defaults legacy.sizeOfNull=true: size(NULL) = -1
     // makes the builtin (-1)/(-1) = 1.0 on a null array — the rewrite
     // must preserve that (If-wrapper), while graft_jaccard itself is
@@ -72,7 +68,6 @@ class PlanRulesSpec extends SparkTestBase {
   }
 
   test("the rewrite fires: builtin composition plans as graft_jaccard") {
-    GraftSession.tuned(spark)
     // parquet-backed input: a literal relation would be constant-folded
     // into a LocalRelation before extraOptimizations ever see Divide
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
@@ -94,7 +89,6 @@ class PlanRulesSpec extends SparkTestBase {
   }
 
   test("ANSI-mode Divide is NOT rewritten (must keep raising DIVIDE_BY_ZERO)") {
-    GraftSession.tuned(spark)
     spark.conf.set("spark.sql.ansi.enabled", "true")
     try {
       val docs = spark.read.parquet(s"$sfDir/documents.parquet")
@@ -107,7 +101,6 @@ class PlanRulesSpec extends SparkTestBase {
   }
 
   test("mismatched argument pairs are NOT rewritten (semantic-equality guard)") {
-    GraftSession.tuned(spark)
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(split(col("text"), " ").as("a"), split(col("lang"), " ").as("b"),
         split(col("source"), " ").as("c"))
@@ -164,7 +157,6 @@ class PlanRulesSpec extends SparkTestBase {
   }
 
   test("two-pass rank stats matches the naive window on NULL balances and NULL segments") {
-    GraftSession.tuned(spark)
     // rows the fixture never contains: a NULL balance (sorts last under
     // DESC) and a whole NULL segment group
     val cust = Seq(
@@ -191,7 +183,6 @@ class PlanRulesSpec extends SparkTestBase {
   }
 
   test("two-pass rank stats == naive window across seeded random inputs and bucket counts") {
-    GraftSession.tuned(spark)
     val rnd = new scala.util.Random(42)
     for (trial <- 1 to 4) {
       // duplicate balances (small value pool) force tie handling through

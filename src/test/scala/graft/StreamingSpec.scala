@@ -206,8 +206,7 @@ class StreamingSpec extends SparkTestBase {
   test("event-time-timeout sessionizer: closed sessions equal the batch session rollup") {
     val tmp = java.nio.file.Files.createTempDirectory("graft-sess").toString
     val in = s"$tmp/in"; new java.io.File(in).mkdirs()
-    val events = graft.engine.Tables
-      .load(graft.engine.GraftSession.tuned(spark), sfDir, "events")
+    val events = graft.engine.Tables.load(spark, sfDir, "events")
       .select(col("user_id").cast("long").as("user_id"),
         col("event_id").cast("long").as("event_id"), col("ts"))
     val subset = events.where(col("user_id") < 5)

@@ -257,7 +257,6 @@ class TrainingPrepSpec extends SparkTestBase {
 
   test("corpus datasheet: hand-computed one-row summary") {
     import spark.implicits._
-    graft.functions.HashExprs.register(spark)
     // 4 docs: "aa bb" x2 (exact dup), "cc" once, one blank; langs
     // en/en/fr/en -> top en 3/4; tokens 2+2+1+0 = 5; chars 5+5+2+0=12
     val docs = Seq(
@@ -280,7 +279,6 @@ class TrainingPrepSpec extends SparkTestBase {
 
   test("corpus datasheet: empty corpus yields ZERO rows, not a 0/NULL row") {
     import spark.implicits._
-    graft.functions.HashExprs.register(spark)
     // the documented invariant (r9 ADVICE): Spark's global aggregates
     // would emit one [0, 0, NULL, ...] row on an empty corpus while
     // the DuckDB oracle's empty top-lang CTE annihilates its cross
