@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructType}
 import org.apache.spark.storage.StorageLevel
 
 import graft.functions.TextOps
@@ -356,6 +357,16 @@ object TrainingPipeline {
     * first attempt saw, never its own partial write). No in-memory
     * accumulation: after a crash the next batch reads the identical
     * state from disk, so replay and restart are safe by construction.
+    * The state is read with the writer's schema (corpus columns plus a
+    * long `batch_id`), so no trigger pays a footer-inference job.
+    *
+    * Cost follows arrivals, not triggers: the watermarked stage makes
+    * Spark run a no-data trigger each time the watermark moves (that
+    * trigger evicts dedup state). Its micro-batch is empty, and the
+    * body returns after one emptiness check, before it reads any state
+    * or builds any plan. The arrived batch is persisted for the
+    * trigger, so the stateful stage runs once for the check and the
+    * gates together.
     *
     * Scope: the corpus-GLOBAL gates (per-language z-cut, the Gopher
     * batteries' corpus statistics, chunk-dedup ownership) are batch
@@ -405,6 +416,13 @@ object TrainingPipeline {
     val corpusBandsP = corpusBands.persist(StorageLevel.MEMORY_AND_DISK)
     ingestState.put(outDir,
       Seq(corpusShared, corpusFp, corpusSetsP, corpusBandsP))
+    // the idempotent writer's layout: the corpus columns plus a LONG
+    // batch_id partition, which replaces any batch_id the corpus carries
+    // (a corpus folded from an earlier stream's output does). Read with
+    // it, the accepted state skips the per-trigger footer-inference job
+    // (which would also type batch_id as int)
+    val acceptedSchema = StructType(
+      corpus.schema.filterNot(_.name == "batch_id")).add("batch_id", LongType)
     val raw = spark.readStream
       .schema(corpus.schema)
       .option("pathGlobFilter", "*.parquet")
@@ -426,64 +444,74 @@ object TrainingPipeline {
     }
     urlDeduped.writeStream
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // accepted-stream standing state, rebuilt from the idempotent
-        // writer's own batch_id= partitions: everything already landed
-        // EXCEPT this batch's own partition (an at-least-once replay
-        // must probe the state its first attempt saw, never its own
-        // partial write). First batch: outDir doesn't exist yet.
-        val accepted: DataFrame =
-          try spark.read.parquet(outDir)
-            .where(col("batch_id") =!= batchId)
-            .select(col("doc_id"), col("text"))
-          catch { case _: org.apache.spark.sql.AnalysisException =>
-            corpus.select(col("doc_id"), col("text")).limit(0) }
-        val redacted = batch
-          .withColumn("text", Cleaning.redactPii(col("text")))
-        val gated = redacted.where(
-          size(split(TextOps.normalizeText(col("text")), " ")) >=
-            cfg.minTokens)
-        // exact dedup: keep-one within the batch (min doc_id per
-        // fingerprint — an aggregate, never a content-keyed window),
-        // then drop anything the corpus OR a prior accepted batch holds
-        val stateFp = corpusFp.unionByName(accepted
-          .select(unhex(TextOps.fingerprint(col("text"))).as("__fp")))
-        val withFp = gated.withColumn("__fp",
-          unhex(TextOps.fingerprint(col("text"))))
-        val batchSurvivors = withFp
-          .groupBy(col("__fp")).agg(min(col("doc_id")).as("doc_id"))
-          .join(stateFp, Seq("__fp"), "left_anti")
-          .select("doc_id")
-        val exactNew = withFp.drop("__fp")
-          .join(batchSurvivors, Seq("doc_id"), "left_semi")
-        // incremental near-dup: batch probes the standing side
-        // (corpus ∪ accepted stream) — never standing×standing. The
-        // corpus sides come from the persisted one-time build above;
-        // only the accepted delta and the batch re-hash per trigger.
-        val (accSets, accBands) = Dedup.lshSides(accepted, "text", "doc_id")
-        val flagged = Dedup.incrementalNearDupsFromSides(
-          (corpusSetsP.unionByName(accSets),
-            corpusBandsP.unionByName(accBands)),
-          Dedup.lshSides(exactNew.select(col("doc_id"), col("text")),
-            "text", "doc_id"),
-          "doc_id", threshold = cfg.nearDupThreshold)
-          .select(col("incoming_id").as("doc_id"))
-        val survivors = exactNew.join(flagged, Seq("doc_id"), "left_anti")
-          // feeds the self-pair LSH (sets + both verify sides) AND the
-          // final anti-join — persist for the batch, released below
-          .persist(StorageLevel.MEMORY_AND_DISK)
+      .foreachBatch { (arrived: DataFrame, batchId: Long) =>
+        // persisted so the stateful URL-dedup subtree runs once per
+        // trigger: the emptiness check and the body both read it
+        val batch = arrived.persist(StorageLevel.MEMORY_AND_DISK)
         try {
-          // batch-SELF near-dup keep-one: pairs come id1 < id2, so
-          // dropping every id2 keeps exactly the docs with no
-          // smaller-id near-dup neighbor in the batch (min-id-wins,
-          // the batch pipeline's survivor policy; bounded batch×batch)
-          val selfDrop = Dedup.minhashNearDupPairs(
-            survivors, "text", "doc_id",
-            threshold = cfg.nearDupThreshold, sorted = false)
-            .select(col("id2").as("doc_id")).distinct()
-          val clean = survivors.join(selfDrop, Seq("doc_id"), "left_anti")
-          graft.streaming.EventOps.idempotentBatchWriter(outDir)(clean, batchId)
-        } finally survivors.unpersist()
+          // a watermarked query runs a no-data trigger whenever the
+          // watermark moves (it evicts the dedup state): that batch is
+          // empty, so return before building any plan
+          if (!batch.isEmpty) {
+            // accepted-stream standing state, rebuilt from the idempotent
+            // writer's own batch_id= partitions: everything already landed
+            // EXCEPT this batch's own partition (an at-least-once replay
+            // must probe the state its first attempt saw, never its own
+            // partial write). First batch: outDir doesn't exist yet.
+            val accepted: DataFrame =
+              try spark.read.schema(acceptedSchema).parquet(outDir)
+                .where(col("batch_id") =!= batchId)
+                .select(col("doc_id"), col("text"))
+              catch { case _: org.apache.spark.sql.AnalysisException =>
+                corpus.select(col("doc_id"), col("text")).limit(0) }
+            val redacted = batch
+              .withColumn("text", Cleaning.redactPii(col("text")))
+            val gated = redacted.where(
+              size(split(TextOps.normalizeText(col("text")), " ")) >=
+                cfg.minTokens)
+            // exact dedup: keep-one within the batch (min doc_id per
+            // fingerprint — an aggregate, never a content-keyed window),
+            // then drop anything the corpus OR a prior accepted batch holds
+            val stateFp = corpusFp.unionByName(accepted
+              .select(unhex(TextOps.fingerprint(col("text"))).as("__fp")))
+            val withFp = gated.withColumn("__fp",
+              unhex(TextOps.fingerprint(col("text"))))
+            val batchSurvivors = withFp
+              .groupBy(col("__fp")).agg(min(col("doc_id")).as("doc_id"))
+              .join(stateFp, Seq("__fp"), "left_anti")
+              .select("doc_id")
+            val exactNew = withFp.drop("__fp")
+              .join(batchSurvivors, Seq("doc_id"), "left_semi")
+            // incremental near-dup: batch probes the standing side
+            // (corpus ∪ accepted stream) — never standing×standing. The
+            // corpus sides come from the persisted one-time build above;
+            // only the accepted delta and the batch re-hash per trigger.
+            val (accSets, accBands) = Dedup.lshSides(accepted, "text", "doc_id")
+            val flagged = Dedup.incrementalNearDupsFromSides(
+              (corpusSetsP.unionByName(accSets),
+                corpusBandsP.unionByName(accBands)),
+              Dedup.lshSides(exactNew.select(col("doc_id"), col("text")),
+                "text", "doc_id"),
+              "doc_id", threshold = cfg.nearDupThreshold)
+              .select(col("incoming_id").as("doc_id"))
+            val survivors = exactNew.join(flagged, Seq("doc_id"), "left_anti")
+              // feeds the self-pair LSH (sets + both verify sides) AND the
+              // final anti-join — persist for the batch, released below
+              .persist(StorageLevel.MEMORY_AND_DISK)
+            try {
+              // batch-SELF near-dup keep-one: pairs come id1 < id2, so
+              // dropping every id2 keeps exactly the docs with no
+              // smaller-id near-dup neighbor in the batch (min-id-wins,
+              // the batch pipeline's survivor policy; bounded batch×batch)
+              val selfDrop = Dedup.minhashNearDupPairs(
+                survivors, "text", "doc_id",
+                threshold = cfg.nearDupThreshold, sorted = false)
+                .select(col("id2").as("doc_id")).distinct()
+              val clean = survivors.join(selfDrop, Seq("doc_id"), "left_anti")
+              graft.streaming.EventOps.idempotentBatchWriter(outDir)(clean, batchId)
+            } finally survivors.unpersist()
+          }
+        } finally batch.unpersist()
       }
       .start()
   }

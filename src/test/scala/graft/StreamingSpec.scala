@@ -709,10 +709,22 @@ class StreamingSpec extends SparkTestBase {
       (106L, "entirely fresh writing on volcanic island formation plate tectonics and basalt column geometry",
         "https://new.example.com/p106"))
       .toDF("doc_id", "text", "url")
+    // (query id, batch id) of every job a micro-batch issues
+    val batchJobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long)]()
+    val jobListener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        for {
+          props <- Option(e.properties)
+          query <- Option(props.getProperty("sql.streaming.queryId"))
+          batch <- Option(props.getProperty("streaming.sql.batchId"))
+        } batchJobs.add(query -> batch.toLong)
+    }
     val q = graft.ext.TrainingPipeline.streamingIngest(
       corpus, in, s"$tmp/out", s"$tmp/ckpt",
       graft.ext.TrainingPipeline.Config(urlDedupCol = Some("url"),
         minTokens = 5, nearDupThreshold = 0.5))
+    // no trigger runs before the first delivery
+    spark.sparkContext.addSparkListener(jobListener)
     try {
       deliver(incoming1, tmp, in, "b0")
       q.processAllAvailable()
@@ -752,6 +764,8 @@ class StreamingSpec extends SparkTestBase {
     } finally {
       q.stop()
       graft.ext.TrainingPipeline.releaseIngestState(s"$tmp/out")
+      org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(jobListener)
     }
     val out = spark.read.parquet(s"$tmp/out")
     val ids = out.select("doc_id").collect().map(_.getLong(0)).toSet
@@ -774,5 +788,27 @@ class StreamingSpec extends SparkTestBase {
     assert(ids.contains(112L), "the batch-3 novel doc must survive")
     // layout contract: the idempotent writer partitions by batch_id
     assert(out.columns.contains("batch_id"))
+    // executed triggers only (an idle progress event has no addBatch)
+    val triggers = q.recentProgress.filter(_.durationMs.containsKey("addBatch"))
+    val dataIds = triggers.filter(_.numInputRows > 0).map(_.batchId).sorted.toSeq
+    assert(dataIds.size == 3, s"one data trigger per arrival: $dataIds")
+    // one partition per data trigger that kept a row; the second
+    // arrival's only doc (107) is a watermarked refetch, so its
+    // trigger carries a row but lands nothing
+    val partitions = new java.io.File(s"$tmp/out").list()
+      .filter(_.startsWith("batch_id=")).map(_.stripPrefix("batch_id=").toLong).toSet
+    assert(partitions == Set(dataIds(0), dataIds(2)),
+      s"partitions $partitions vs data triggers $dataIds")
+    // the watermark's no-data triggers evict state and carry no rows:
+    // each may issue at most the one job of its emptiness check
+    val jobs = batchJobs.toArray(Array.empty[(String, Long)]).toSeq
+      .collect { case (query, batch) if query == q.id.toString => batch }
+      .groupBy(identity).map { case (batch, js) => batch -> js.size }
+    val noDataIds = triggers.filter(_.numInputRows == 0).map(_.batchId).toSeq
+    assert(noDataIds.nonEmpty, "the watermark must have run a no-data trigger")
+    noDataIds.foreach { id =>
+      assert(jobs.getOrElse(id, 0) <= 1,
+        s"no-data trigger $id issued ${jobs.getOrElse(id, 0)} jobs (all: $jobs)")
+    }
   }
 }

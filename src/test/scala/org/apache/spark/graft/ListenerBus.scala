@@ -1,0 +1,10 @@
+package org.apache.spark.graft
+
+import org.apache.spark.SparkContext
+
+/** Test access to the `private[spark]` listener bus. */
+object ListenerBus {
+
+  /** Block until every event posted so far has reached the listeners. */
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
